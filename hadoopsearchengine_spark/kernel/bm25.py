@@ -49,13 +49,6 @@ def max_contrib_bound(term_idf: float) -> float:
     return term_idf * (K1 + 1.0)
 
 
-def top_k_sort(doc_ids: np.ndarray, scores: np.ndarray, k: int):
-    """Deterministic top-k: score desc, doc_id asc. Returns (ids, scores)."""
-    order = np.lexsort((doc_ids, -scores))
-    sel = order[:k]
-    return doc_ids[sel], scores[sel]
-
-
 def ln(x: float) -> float:
     return math.log(x)
 

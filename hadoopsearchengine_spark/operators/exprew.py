@@ -78,27 +78,30 @@ def expected_reward(candidates: DataFrame, links: DataFrame,
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    p = active.withColumn("p", F.lit(1.0)).localCheckpoint()
-    for _ in range(iterations):
-        back = (e.join(p.select(F.col("doc_id").alias("src"),
-                                F.col("p").alias("ps")), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("w") * F.col("ps")).alias("back")))
-        bumped = (p.join(back.withColumnRenamed("dst", "doc_id"),
-                         "doc_id", "left")
-                  .select("doc_id",
-                          (F.col("p") + F.coalesce("back", F.lit(0.0)))
-                          .alias("p")))
-        tot = bumped.agg(F.sum("p").alias("s"))
-        p = (bumped.crossJoin(F.broadcast(tot))
-             .select("doc_id", (F.col("p") / F.col("s")).alias("p"))
-             .localCheckpoint())
-    # p is checkpointed — the edge cache has no consumers left; release it
-    # so repeated invocations don't accumulate session-lifetime cache
-    # entries (the q_txt_spell_suggest leak pattern)
-    e.unpersist()
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    try:
+        p = active.withColumn("p", F.lit(1.0)).localCheckpoint()
+        for _ in range(iterations):
+            back = (e.join(p.select(F.col("doc_id").alias("src"),
+                                    F.col("p").alias("ps")), "src")
+                    .groupBy("dst")
+                    .agg(F.sum(F.col("w") * F.col("ps")).alias("back")))
+            bumped = (p.join(back.withColumnRenamed("dst", "doc_id"),
+                             "doc_id", "left")
+                      .select("doc_id",
+                              (F.col("p") + F.coalesce("back", F.lit(0.0)))
+                              .alias("p")))
+            tot = bumped.agg(F.sum("p").alias("s"))
+            p = (bumped.crossJoin(F.broadcast(tot))
+                 .select("doc_id", (F.col("p") / F.col("s")).alias("p"))
+                 .localCheckpoint())
+    finally:
+        # p is checkpointed — the edge cache has no consumers left; release
+        # it so repeated invocations don't accumulate session-lifetime cache
+        # entries (the q_txt_spell_suggest leak pattern). The session conf
+        # is restored whether the loop finished or raised.
+        e.unpersist()
+        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     fin = p.select("doc_id", F.round("p", round_to).alias("trav_prob"))
     fin = fin.withColumn("recurrent", F.col("trav_prob") > threshold)
     # the candidate set is query-sized: a single-partition rank window here

@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .wand import QueryEngine, sweep_range_bounds
+from .wand import EPS, QueryEngine, merge_topk, sweep_range_bounds
 
 
 def _max_doc_id(index_dir: str) -> int:
@@ -115,17 +115,6 @@ class DocShard:
         np.add.at(tot, inv, c[mask])
         tot *= self.prior[uniq - self.lo]
         return uniq, tot
-
-    def top_m(self, d: np.ndarray, c: np.ndarray, m: int) \
-            -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """This shard's top-m candidates (doc_ids, scores, checksums) by
-        (score desc, doc_id asc) — what a retrieve server returns to the
-        final merge; the global top-m is a subset of the per-shard top-m
-        union."""
-        uniq, tot = self.weighted_totals(d, c)
-        order = np.lexsort((uniq, -tot))[:m]
-        uniq, tot = uniq[order], tot[order]
-        return uniq, tot, self.text_fp[uniq - self.lo]
 
     def fps(self, doc_ids: np.ndarray) -> np.ndarray:
         """Content checksums for doc_ids (all must lie in [lo, hi))."""
@@ -233,6 +222,8 @@ class ShardedQueryEngine:
         best-ranked, using the doc tier's checksums. prune=True runs the
         gather-fed-theta scatter (module docstring) — rank-identical,
         decodes only the blocks the single-engine WAND would."""
+        if k < 1:
+            return []
         if prune:
             return self._search_pruned(query, k, dedup)
         if self._pool is not None:
@@ -246,20 +237,15 @@ class ShardedQueryEngine:
             return []
         d = np.concatenate(ds)
         c = np.concatenate([p[1] for p in parts if p[0].size])
-        # gather: each doc shard returns its local top-m; the global top-m
-        # is inside the union because doc shards partition the id space
+        # gather: doc shards partition the id space, so each one's per-doc
+        # totals are complete and merge straight into the global top-m
         m = 4 * k + 8 if dedup else k
-        tops = [sh.top_m(d, c, m) for sh in self.doc_shards]
-        tops = [t for t in tops if t[0].size]
-        if not tops:
-            return []
-        gd = np.concatenate([t[0] for t in tops])
-        gs = np.concatenate([t[1] for t in tops])
-        gf = np.concatenate([t[2] for t in tops])
-        order = np.lexsort((gd, -gs))[:m]
-        if not dedup:
-            return [(int(gd[i]), float(gs[i])) for i in order]
-        return self._dedup_cut(gd[order], gs[order], gf[order], k)
+        top_d = np.empty(0, dtype=np.int64)
+        top_s = np.empty(0, dtype=np.float64)
+        for sh in self.doc_shards:
+            top_d, top_s = merge_topk(top_d, top_s,
+                                      *sh.weighted_totals(d, c), m)
+        return self._ranked(top_d, top_s, k, dedup)
 
     def _search_pruned(self, query: str, k: int,
                        dedup: bool) -> list[tuple[int, float]]:
@@ -272,7 +258,6 @@ class ShardedQueryEngine:
         every skipped range is provably below the k-th score (max_score
         stores max(prior*contrib) per block, and per-doc totals are
         complete per range because blocks partition doc ranges)."""
-        import heapq
         handles = [(s, s.open_scatter(query)) for s in self.shards]
         handles = [(s, h) for s, h in handles if h is not None]
         self.last_blocks_scored = []
@@ -284,13 +269,12 @@ class ShardedQueryEngine:
         bounds, range_ub = sweep_range_bounds(blk_min, blk_max, blk_ms)
         range_order = np.argsort(-range_ub, kind="stable")
         m = 4 * k + 8 if dedup else k
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-        theta = -np.inf
-        EPS = 1e-9  # same ulp slack as the single engine
+        top_d = np.empty(0, dtype=np.int64)
+        top_s = np.empty(0, dtype=np.float64)
         for ri in range_order:
             ub = float(range_ub[ri])
             lo, hi = int(bounds[ri]), int(bounds[ri + 1])
-            if len(heap) >= m and ub < theta - EPS:
+            if top_s.size == m and ub < top_s[-1] - EPS:
                 continue
             parts = [s.score_range(h, lo, hi) for s, h in handles]
             ds = [p[0] for p in parts if p[0].size]
@@ -299,29 +283,18 @@ class ShardedQueryEngine:
             d = np.concatenate(ds)
             c = np.concatenate([p[1] for p in parts if p[0].size])
             for sh in self.doc_shards:
-                uniq, tot = sh.weighted_totals(d, c)
-                if not uniq.size:
-                    continue
-                if len(heap) >= m:
-                    cand = np.flatnonzero(tot >= theta - EPS)
-                else:
-                    cand = np.arange(len(uniq))
-                for j in cand:
-                    item = (float(tot[j]), -int(uniq[j]))
-                    if len(heap) < m:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-                if len(heap) >= m:
-                    theta = heap[0][0]
+                top_d, top_s = merge_topk(top_d, top_s,
+                                          *sh.weighted_totals(d, c), m)
         self.last_blocks_scored = [h["blocks_scored"] for _, h in handles]
-        out = sorted(((-nd, s) for s, nd in heap),
-                     key=lambda x: (-x[1], x[0]))
+        return self._ranked(top_d, top_s, k, dedup)
+
+    def _ranked(self, top_d: np.ndarray, top_s: np.ndarray, k: int,
+                dedup: bool) -> list[tuple[int, float]]:
+        """The result list from the ranked top-m arrays: as they are, or
+        cut to k checksum-distinct docs under dedup."""
         if not dedup:
-            return [(int(d), float(s)) for d, s in out]
-        docs = np.array([d for d, _ in out], dtype=np.int64)
-        fps = self._fps(docs)
-        return self._dedup_cut(docs, np.array([s for _, s in out]), fps, k)
+            return [(int(d), float(s)) for d, s in zip(top_d, top_s)]
+        return self._dedup_cut(top_d, top_s, self._fps(top_d), k)
 
     def _fps(self, doc_ids: np.ndarray) -> np.ndarray:
         """Content checksums routed to the owning doc shards."""

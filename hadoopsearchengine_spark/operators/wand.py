@@ -15,6 +15,15 @@ Two paths, both rank-identical to the oracle:
   the stored block max is ``max(prior * contrib)`` which upper-bounds every
   doc's per-term share of ``prior * Σ contrib``.
 
+  Candidate selection is a block at a time too. The running top-k is two
+  sorted numpy arrays (doc ids, scores); each admitted range's per-doc
+  totals merge into it in one vectorized select (``merge_topk``). Ranges
+  are disjoint doc intervals, so this is the exact top-k under (score desc,
+  doc_id asc). Proximity queries visit a range's candidates in descending
+  BM25 total and stop at the first whose total times the largest proximity
+  multiplier (``1 + PROX_ALPHA``) falls below the live k-th score, so the
+  exact min-span runs only for docs that can still enter the top k.
+
 - ``bm25_topk_df`` (distributed): plain DataFrame join/agg scoring for
   driver-verifiable parity and for batch query workloads.
 
@@ -24,13 +33,16 @@ The per-query engine is what the p95-latency benchmark measures (SURVEY §3.2:
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 
 from ..kernel import bm25
 from ..kernel.codec import decode_deltas, decode_tfs
 from ..kernel.tokenize import tokenize
+
+# 1e-9 slack absorbs float ulp differences between a score upper bound and
+# the actual score (different summation orders), keeping every prune
+# rank-exact including ties
+EPS = 1e-9
 
 
 class _LRU:
@@ -96,6 +108,23 @@ def blocks_in_range(t_begin: np.ndarray, t_end: np.ndarray,
             runs.append(np.arange(l, r))
     return (np.concatenate(runs) if runs
             else np.empty(0, dtype=np.int64))
+
+
+def merge_topk(top_d: np.ndarray, top_s: np.ndarray, d: np.ndarray,
+               s: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """-> (doc_ids, scores): the best ``k`` of the running top-k
+    ``(top_d, top_s)`` and the candidates ``(d, s)``, ordered by (score
+    desc, doc_id asc); ``k >= 1``. The two must share no doc id (callers
+    merge disjoint doc ranges), so the result is the exact top-k of their
+    union. A partition first keeps only entries scoring at least the k-th
+    score, ties included, so the full sort runs on about k entries."""
+    d = np.concatenate((top_d, d))
+    s = np.concatenate((top_s, s))
+    if s.size > k:
+        keep = s >= np.partition(s, s.size - k)[s.size - k]
+        d, s = d[keep], s[keep]
+    order = np.lexsort((d, -s))[:k]
+    return d[order], s[order]
 
 
 class QueryEngine:
@@ -342,9 +371,21 @@ class QueryEngine:
         expand=0 (default) is byte-identical to no expansion. Needs the
         ``associations`` table (plans.associations.build_associations).
         Pruning stays rank-exact: each block's upper bound carries its
-        term's weight."""
+        term's weight.
+
+        Candidates are selected a range at a time: each admitted range's
+        per-doc totals merge into the running top-k in one vectorized
+        select (``merge_topk``). Under proximity=True a range's candidates
+        are visited in descending BM25 total, and the visit stops at the
+        first whose total times ``1 + PROX_ALPHA`` (the largest multiplier)
+        falls below the live k-th score, so the exact min-span is computed
+        only for docs that can still enter the top k. prune=False skips
+        neither ranges nor candidates: it scores every matching doc exactly
+        and is the reference the pruned path is tested against."""
         if title_boost and field_boost:
             raise ValueError("field_boost already includes the title field")
+        if k < 1:
+            return []
         ck = (query, k, prune, proximity, title_boost, field_boost,
               spam_cap, dedup, expand, expand_damp)
         if self._res_cache_size:
@@ -378,13 +419,9 @@ class QueryEngine:
                 if len(out) == k:
                     break
             return store(out)
-        qterms = sorted(set(tokenize(query)))
-        tids = [int(self.term_id[t]) for t in qterms if t in self.term_id]
+        tids, idfs = self._query_tids(query)
         if not tids:
             return store([])
-        idfs = {int(self.term_id[t]): float(bm25.idf(int(self.term_df[t]),
-                                                     self.n_docs))
-                for t in qterms if t in self.term_id}
         tweight = {t: 1.0 for t in tids}
         if expand > 0:
             for atid, w in sorted(
@@ -411,12 +448,9 @@ class QueryEngine:
             blk_ms = blk_ms * np.array(
                 [tweight[int(t)] for t in V["term_id"][rows]])
 
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-        theta = -np.inf
-        # 1e-9 slack absorbs float ulp differences between the block-max sum
-        # and the actual score sum (different summation orders), keeping the
-        # prune rank-exact including ties
-        EPS = 1e-9
+        # running top-k, sorted (score desc, doc_id asc)
+        top_d = np.empty(0, dtype=np.int64)
+        top_s = np.empty(0, dtype=np.float64)
 
         # O(B log B) range sweep (r3 verdict №4; rationale on the module
         # helpers). Block lists are computed LAZILY, only for ranges the
@@ -498,7 +532,8 @@ class QueryEngine:
         for ri in range_order:
             ub, lo, hi = (float(range_ub[ri]), int(bounds[ri]),
                           int(bounds[ri + 1]))
-            if prune and len(heap) >= k and ub * boost_cap < theta - EPS:
+            theta = top_s[-1] if top_s.size == k else -np.inf
+            if prune and ub * boost_cap < theta - EPS:
                 continue  # no doc in this range can beat/tie the k-th score
             idx = blocks_in_range(t_begin, t_end, blk_min, blk_max, lo, hi)
             all_d, all_c, all_r = [], [], []
@@ -539,27 +574,24 @@ class QueryEngine:
                 mx = np.zeros(len(uniq), dtype=np.float64)
                 np.maximum.at(mx, inv, np.concatenate(all_r))
                 tot[mx > bm25.SPAM_TF_CAP] = 0.0
-            # only candidates that can enter the heap need the python loop
-            if len(heap) >= k:
-                cand = np.flatnonzero(tot * boost_cap >= theta - EPS)
-            else:
-                cand = np.arange(len(uniq))
-            for j in cand:
-                score = float(tot[j])
-                did = int(uniq[j])
-                if proximity:
-                    score *= bm25.proximity_multiplier(
-                        doc_positions(did, idx))
-                item = (score, -did)
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-            if len(heap) >= k:
-                theta = heap[0][0]
+            if not proximity:
+                top_d, top_s = merge_topk(top_d, top_s, uniq, tot, k)
+                continue
+            # tot is the exact score before the multiplier, which is at
+            # most 1 + PROX_ALPHA: in descending tot order, the first
+            # candidate whose bound misses the live k-th score ends the
+            # range for every candidate after it
+            bound = tot * (1.0 + bm25.PROX_ALPHA)
+            for j in np.argsort(-tot, kind="stable"):
+                if (prune and top_s.size == k
+                        and bound[j] < top_s[-1] - EPS):
+                    break
+                score = float(tot[j]) * bm25.proximity_multiplier(
+                    doc_positions(int(uniq[j]), idx))
+                top_d, top_s = merge_topk(top_d, top_s, uniq[j:j + 1],
+                                          np.array([score]), k)
 
-        out = sorted(((-nd, s) for s, nd in heap), key=lambda x: (-x[1], x[0]))
-        return store([(int(d), float(s)) for d, s in out])
+        return store([(int(d), float(s)) for d, s in zip(top_d, top_s)])
 
     def did_you_mean(self, query: str, max_dist: int = 2,
                      topn: int = 1) -> dict[str, list[tuple[str, int, int]]]:
@@ -677,13 +709,9 @@ class QueryEngine:
         Shares the engine's decode caches with search(), plain-path
         entries only."""
         empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-        qterms = sorted(set(tokenize(query)))
-        tids = [int(self.term_id[t]) for t in qterms if t in self.term_id]
+        tids, idfs = self._query_tids(query)
         if not tids:
             return empty
-        idfs = {int(self.term_id[t]): float(bm25.idf(int(self.term_df[t]),
-                                                     self.n_docs))
-                for t in qterms if t in self.term_id}
         V, rows, gkeys = self._load_blocks(tids, False)
         if rows.size == 0:
             return empty

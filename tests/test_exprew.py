@@ -108,3 +108,32 @@ def test_engine_rerank_expected_reward(index_dir):
         cut = eng.rerank_expected_reward(ranked, threshold=0.05)
         assert {d for d, _ in cut} <= {d for d, _ in ranked}
     assert eng.rerank_expected_reward([]) == []
+
+
+def test_expected_reward_restores_conf_when_loop_raises(spark, monkeypatch):
+    """The loop runs under its own shuffle-partition and AQE settings; a
+    failure inside it must still hand the session back unchanged."""
+    import pytest
+
+    cand = spark.createDataFrame([(d,) for d in (1, 2, 3)], "doc_id long")
+    links = spark.createDataFrame([(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0)],
+                                  "src long, dst long, weight double")
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {key: spark.conf.get(key) for key in keys}
+    frame = type(cand)  # the session's concrete DataFrame class
+    real = frame.localCheckpoint
+    calls = []
+
+    def failing(self, *args, **kwargs):
+        # the candidate checkpoint and the seed pass; the first
+        # iteration's checkpoint fails
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected failure")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", failing)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        expected_reward(cand, links, iterations=3)
+    assert {key: spark.conf.get(key) for key in keys} == before
+    assert before["spark.sql.shuffle.partitions"] != "4"

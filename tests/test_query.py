@@ -24,11 +24,87 @@ def test_rank_identical_topk(engine, oracle_index, query):
             assert abs(gs - ws) < 1e-6
 
 
-def test_prune_equals_no_prune(engine):
+PRUNE_OPTIONS = [{}, {"proximity": True}, {"title_boost": True},
+                 {"field_boost": True}, {"spam_cap": True},
+                 {"title_boost": True, "proximity": True, "spam_cap": True}]
+
+
+def test_prune_equals_no_prune(index_dir):
+    """Range skipping, the vectorized top-k merge and the proximity
+    candidate cut together return exactly what exhaustive scoring returns,
+    ties at the k-th place included."""
+    eng = QueryEngine(index_dir, result_cache=0)
     for query in REFERENCE_QUERIES:
-        a = engine.search(query, k=10, prune=True)
-        b = engine.search(query, k=10, prune=False)
-        assert a == b
+        for opts in PRUNE_OPTIONS:
+            for k in (1, 3, 10, 100):
+                a = eng.search(query, k=k, prune=True, **opts)
+                b = eng.search(query, k=k, prune=False, **opts)
+                assert a == b, (query, opts, k)
+
+
+def test_proximity_cut_skips_min_span(index_dir, monkeypatch):
+    """Proximity candidates are visited in descending BM25 total and the
+    visit stops once the multiplier's bound misses the live k-th score, so
+    the exact min-span runs for far fewer docs than the ranges score."""
+    from hadoopsearchengine_spark.kernel import bm25
+    eng = QueryEngine(index_dir, result_cache=0)
+    calls = []
+    real = bm25.proximity_multiplier
+    monkeypatch.setattr(bm25, "proximity_multiplier",
+                        lambda pos: calls.append(1) or real(pos))
+    pruned = scored = 0
+    for query in REFERENCE_QUERIES:
+        del calls[:]
+        eng.search(query, k=10, proximity=True)
+        pruned += len(calls)
+        del calls[:]
+        # prune=False evaluates every candidate of every range: one call
+        # per doc scored
+        eng.search(query, k=10, proximity=True, prune=False)
+        scored += len(calls)
+    assert pruned * 10 < scored, (pruned, scored)
+
+
+def test_merge_topk_matches_heap_reference():
+    """merge_topk against a heapq top-k over the same stream, on ranges of
+    heavily tied scores so ties straddle the k-th place."""
+    import heapq
+
+    import numpy as np
+
+    from hadoopsearchengine_spark.operators.wand import merge_topk
+
+    rng = np.random.default_rng(3)
+    boundary_ties = 0
+    for trial in range(200):
+        k = int(rng.integers(1, 12))
+        top_d = np.empty(0, dtype=np.int64)
+        top_s = np.empty(0, dtype=np.float64)
+        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
+        seen = []
+        lo = 0
+        for _ in range(int(rng.integers(1, 6))):
+            n = int(rng.integers(0, 25))
+            # each range a disjoint doc interval, its ids shuffled, its
+            # scores drawn from 3 values
+            d = lo + rng.permutation(n).astype(np.int64)
+            lo += n
+            s = rng.choice([0.5, 1.0, 2.0], n)
+            seen.extend(s)
+            top_d, top_s = merge_topk(top_d, top_s, d, s, k)
+            for did, sc in zip(d, s):
+                item = (float(sc), -int(did))
+                if len(heap) < k:
+                    heapq.heappush(heap, item)
+                elif item > heap[0]:
+                    heapq.heapreplace(heap, item)
+        want = sorted(((-nd, sc) for sc, nd in heap),
+                      key=lambda x: (-x[1], x[0]))
+        got = [(int(d), float(s)) for d, s in zip(top_d, top_s)]
+        assert got == want, (trial, k)
+        seen.sort(reverse=True)
+        boundary_ties += len(seen) > k and seen[k - 1] == seen[k]
+    assert boundary_ties > 50  # the k-th place was contested by doc id
 
 
 def test_prune_skips_blocks(index_dir):
