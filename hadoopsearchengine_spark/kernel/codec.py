@@ -4,9 +4,13 @@ Re-expresses the reference's compressed posting storage (varint "escaped
 items", reference MyStuff.h:270-371; 6-byte packed hits,
 DyableSort/CompileLookupIndex/HitTypeWordDivision.h:88-105) as a vectorized
 kernel: sorted doc ids are delta-encoded (first value absolute) and the gap /
-tf / position streams are LEB128-packed. No per-element Python loops — both
-encode and decode are O(total_bytes) numpy array ops, so the same code is the
-hot path inside ``applyInPandas`` at build time and inside the query scorer.
+tf / position streams are LEB128-packed or fixed-width bit-packed, whichever
+is smaller. No per-element Python loops: encode is O(total_bytes) numpy
+array ops (the hot path inside ``applyInPandas`` at build time). Decode, the
+hot path of the query scorer, works a machine word at a time: a bit-packed
+value is cut out of the two little-endian uint64 words it touches, and a
+varint stream with no multi-byte value is a plain byte widen. Decoders take
+``bytes`` or a ``memoryview`` and slice it without copying.
 
 Pure numpy; shared verbatim with the oracle.
 """
@@ -16,6 +20,10 @@ from __future__ import annotations
 import numpy as np
 
 _THRESHOLDS = [np.uint64(1) << np.uint64(7 * k) for k in range(1, 10)]
+# typed scalars: a Python int operand costs numpy a value-based cast per call
+_CONT = np.uint8(0x80)
+_PAYLOAD = np.uint8(0x7F)
+_ONE, _SIX, _63 = np.uint64(1), np.uint64(6), np.uint64(63)
 
 
 def encode_varints(values: np.ndarray) -> bytes:
@@ -40,22 +48,41 @@ def encode_varints(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def decode_varints(buf: bytes) -> np.ndarray:
-    """Inverse of encode_varints -> uint64 array. Vectorized."""
+def decode_varints(buf) -> np.ndarray:
+    """Inverse of encode_varints -> uint64 array. Vectorized: a stream with
+    no continuation bit set is a plain byte widen; otherwise each value
+    starts from its first byte's payload, and pass j ORs in the j-th byte of
+    the values longer than j bytes (one pass per extra byte of the longest
+    value; posting streams rarely need more than one)."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_term = (b & 0x80) == 0  # terminator byte of each value
-    # group id per byte: number of terminators strictly before this byte
-    group = np.concatenate(([0], np.cumsum(is_term)[:-1])).astype(np.int64)
-    n_vals = int(is_term.sum())
-    # position of byte within its group
-    starts = np.concatenate(([0], np.flatnonzero(is_term)[:-1] + 1))
-    pos_in_group = np.arange(b.size, dtype=np.int64) - starts[group]
-    payload = (b & 0x7F).astype(np.uint64) << (7 * pos_in_group).astype(np.uint64)
-    out = np.zeros(n_vals, dtype=np.uint64)
-    np.add.at(out, group, payload)
+    ends = (b < _CONT).nonzero()[0]  # terminator byte of each value
+    if ends.size == b.size:
+        return b.astype(np.uint64)  # every value is one byte
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    out = (b[starts] & _PAYLOAD).astype(np.uint64)
+    multi = (ends > starts).nonzero()[0]
+    j = 0
+    while multi.size:
+        j += 1
+        at = starts[multi] + j
+        out[multi] |= ((b[at] & _PAYLOAD).astype(np.uint64)
+                       << np.uint64(7 * j))
+        multi = multi[ends[multi] > at]
     return out
+
+
+def _read_count(buf, i: int) -> tuple[int, int]:
+    """The LEB128 value at ``buf[i]`` -> (value, index just past it)."""
+    n = shift = 0
+    while True:
+        byte = buf[i]
+        i += 1
+        n |= (byte & 0x7F) << shift
+        if byte < 0x80:
+            return n, i
+        shift += 7
 
 
 def encode_deltas(sorted_ids: np.ndarray) -> bytes:
@@ -76,8 +103,7 @@ def encode_deltas(sorted_ids: np.ndarray) -> bytes:
 
 def decode_deltas(buf: bytes) -> np.ndarray:
     """Inverse of encode_deltas -> int64 array of absolute ids."""
-    gaps = decode_best(buf)
-    return np.cumsum(gaps.astype(np.int64))
+    return np.cumsum(decode_best(buf).view(np.int64))
 
 
 def encode_tfs(tfs: np.ndarray) -> bytes:
@@ -110,8 +136,10 @@ def encode_positions(positions_concat: np.ndarray, counts: np.ndarray) -> bytes:
 
 
 def decode_positions(buf: bytes, counts: np.ndarray) -> np.ndarray:
-    """Inverse of encode_positions -> concatenated absolute positions."""
-    deltas = decode_best(buf).astype(np.int64)
+    """Inverse of encode_positions -> concatenated absolute positions.
+    ``counts`` (positions per doc) may be of any numeric dtype holding
+    whole numbers, e.g. the float tf array a scorer already decoded."""
+    deltas = decode_best(buf).view(np.int64)
     if deltas.size == 0:
         return deltas
     out = np.cumsum(deltas)
@@ -127,7 +155,11 @@ def decode_positions(buf: bytes, counts: np.ndarray) -> np.ndarray:
 #    "varint/PForDelta-compressed" payloads). Frame-of-reference + fixed
 #    bit-width packing, numpy-vectorized; an alternative to LEB128 for dense
 #    gap/tf streams. Layout: [width:1B][n:varint][packed little-endian bits]
-#    with width=255 marking a raw 8-byte fallback. --
+#    with width=255 marking a raw 8-byte fallback. Value i occupies bits
+#    [i*width, (i+1)*width) of the payload read as little-endian uint64
+#    words, so decode gathers, per value, the word holding its first bit and
+#    the next one, and shifts the value out of the pair: width <= 63 means
+#    no value touches a third word. --
 
 
 def encode_bitpack(values: np.ndarray) -> bytes:
@@ -154,24 +186,36 @@ def encode_bitpack(values: np.ndarray) -> bytes:
     return header + packed.tobytes()
 
 
-def decode_bitpack(buf: bytes) -> np.ndarray:
-    """Inverse of encode_bitpack."""
+def decode_bitpack(buf) -> np.ndarray:
+    """Inverse of encode_bitpack, a word at a time (see the layout note)."""
     width = buf[0]
-    rest = np.frombuffer(buf, dtype=np.uint8, offset=1)
-    # varint n: find its end
-    end = 0
-    while rest[end] & 0x80:
-        end += 1
-    n = int(decode_varints(rest[:end + 1].tobytes())[0])
-    payload = rest[end + 1:]
+    n, start = _read_count(buf, 1)
     if n == 0:
         return np.empty(0, dtype=np.uint64)
     if width == 255:
-        return np.frombuffer(payload.tobytes(), dtype=np.uint64, count=n)
-    flat = np.unpackbits(payload, bitorder="little")[: n * width]
-    bits = flat.reshape(n, width).astype(np.uint64)
-    shifts = np.arange(width, dtype=np.uint64)
-    return (bits << shifts[None, :]).sum(axis=1, dtype=np.uint64)
+        return np.frombuffer(buf, dtype=np.uint64, count=n, offset=start)
+    nbytes = (n * width + 7) // 8
+    # payload as words, plus one zero word so the pair read of the last
+    # value never runs off the end
+    words = np.zeros((nbytes + 7) // 8 + 1, dtype="<u8")
+    words.view(np.uint8)[:nbytes] = np.frombuffer(
+        buf, dtype=np.uint8, count=nbytes, offset=start)
+    bit = np.arange(0, n * width, width, dtype=np.uint64)  # first bits
+    word = (bit >> _SIX).astype(np.intp)
+    bit &= _63  # offset of the first bit within its word
+    out = words[word]
+    out >>= bit
+    word += 1
+    high = words[word]
+    del word
+    # bits from the next word land above the 64 - bit low ones; the shift
+    # is split in two so bit == 0 shifts by 64 (to zero) without overflow
+    high <<= _ONE
+    np.subtract(_63, bit, out=bit)
+    high <<= bit
+    out |= high
+    out &= np.uint64((1 << width) - 1)
+    return out
 
 
 def encode_best(values: np.ndarray) -> bytes:
@@ -187,7 +231,8 @@ def encode_best(values: np.ndarray) -> bytes:
 def decode_best(buf: bytes) -> np.ndarray:
     if not buf:
         return np.empty(0, dtype=np.uint64)
-    tag, rest = buf[0], buf[1:]
+    view = memoryview(buf)
+    tag, rest = view[0], view[1:]
     if tag == 0x56:
         return decode_varints(rest)
     if tag == 0x42:

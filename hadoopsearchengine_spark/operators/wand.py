@@ -483,7 +483,7 @@ class QueryEngine:
             got = dec_cache.get(key)
             if got is None:
                 g = rows[bi]
-                ids = decode_deltas(V["doc_gaps"][g]).astype(np.int64)
+                ids = decode_deltas(V["doc_gaps"][g])
                 raw = decode_tfs(V["tfs"][g]).astype(np.float64)
                 if field_boost:
                     tfs = bm25.weighted_tf(
@@ -500,15 +500,15 @@ class QueryEngine:
                 got = dec_cache[key] = (ids, tfs, raw)
             return got
 
-        def ensure_positions(bi: int):
+        def ensure_positions(bi: int, raw_tfs: np.ndarray):
+            """-> (positions, per-doc offsets) for block bi; ``raw_tfs`` is
+            the block's decoded body tf array from ensure_decoded (raw tf
+            counts, NOT the title-weighted tfs, frame positions)."""
             key = int(gkeys[bi]) if has_gidx else bi
             got = pos_cache.get(key)
             if got is None:
                 from ..kernel.codec import decode_positions
-                g = rows[bi]
-                # raw tf counts (NOT the title-weighted tfs) frame positions
-                raw_tfs = decode_tfs(V["tfs"][g]).astype(np.int64)
-                pos = decode_positions(V["positions"][g], raw_tfs)
+                pos = decode_positions(V["positions"][rows[bi]], raw_tfs)
                 offsets = np.concatenate(
                     ([0], np.cumsum(raw_tfs))).astype(np.int64)
                 got = pos_cache[key] = (pos, offsets)
@@ -518,10 +518,10 @@ class QueryEngine:
             """Per matched term, the doc's ascending position array."""
             out = []
             for bi in block_idx:
-                ids, _tfs, _raw = ensure_decoded(int(bi))
+                ids, _tfs, raw = ensure_decoded(int(bi))
                 j = int(np.searchsorted(ids, doc_id))
                 if j < len(ids) and ids[j] == doc_id:
-                    pos, offs = ensure_positions(int(bi))
+                    pos, offs = ensure_positions(int(bi), raw)
                     seg = pos[offs[j]:offs[j + 1]]
                     if len(seg):  # tf=0 (anchor-only) rows have no positions
                         out.append(seg)
@@ -671,7 +671,7 @@ class QueryEngine:
             got = self._dec_plain.get(key)
             if got is None:
                 g = rows[bi]
-                ids = decode_deltas(V["doc_gaps"][g]).astype(np.int64)
+                ids = decode_deltas(V["doc_gaps"][g])
                 raw = decode_tfs(V["tfs"][g]).astype(np.float64)
                 got = (ids, raw, raw)
                 self._dec_plain[key] = got
@@ -723,7 +723,7 @@ class QueryEngine:
             got = self._dec_plain.get(key) if has_gidx else None
             if got is None:
                 g = rows[bi]
-                ids = decode_deltas(V["doc_gaps"][g]).astype(np.int64)
+                ids = decode_deltas(V["doc_gaps"][g])
                 raw = decode_tfs(V["tfs"][g]).astype(np.float64)
                 got = (ids, raw, raw)  # plain path: scoring tfs == raw tfs
                 if has_gidx:
@@ -886,7 +886,7 @@ def bm25_topk_df(spark, index_dir: str, query: str, k: int = 10):
             outs = []
             for tid, gaps, tfs in zip(pdf["term_id"], pdf["doc_gaps"],
                                       pdf["tfs"]):
-                ids = decode_deltas(gaps).astype(np.int64)
+                ids = decode_deltas(gaps)
                 tf = decode_tfs(tfs).astype(np.int64)
                 outs.append(pd.DataFrame(
                     {"term_id": int(tid), "doc_id": ids, "tf": tf}))

@@ -1,10 +1,13 @@
 """Varint/delta codec property tests (randomized round-trips, after
 SURVEY.md §5 adopted strategy #3)."""
 
+import tracemalloc
+
 import numpy as np
 import pytest
 
 from hadoopsearchengine_spark.kernel import codec
+from tests import codec_reference as ref
 
 try:
     from hypothesis import given, settings, strategies as st
@@ -124,3 +127,69 @@ if HAVE_HYP:
     def test_hypothesis_best_codec(vals):
         arr = np.array(vals, dtype=np.uint64)
         assert np.array_equal(codec.decode_best(codec.encode_best(arr)), arr)
+
+
+REF_NS = (0, 1, 7, 8, 9, 63, 64, 65, 1000)
+
+
+def _assert_same(got, want):
+    assert got.dtype == np.uint64
+    np.testing.assert_array_equal(got, want)
+
+
+def test_bitpack_matches_reference_every_width():
+    """Every packed width 1..63 (57-63 put a value across two words at most
+    offsets) and the raw 255 path, at n around the 8-value byte and 64-bit
+    word boundaries, with each width's largest value present."""
+    rng = np.random.default_rng(31)
+    for width in range(1, 65):
+        top = (1 << width) - 1
+        for n in REF_NS:
+            vals = rng.integers(0, top, size=n, dtype=np.uint64,
+                                endpoint=True)
+            vals[::5] = top
+            buf = codec.encode_bitpack(vals)
+            assert buf[0] == (width if width < 64 else 255) or n == 0
+            _assert_same(codec.decode_bitpack(buf), ref.decode_bitpack(buf))
+            _assert_same(codec.decode_bitpack(buf), vals)
+            tagged = codec.encode_best(vals)
+            _assert_same(codec.decode_best(tagged), ref.decode_best(tagged))
+
+
+def test_varints_match_reference():
+    """All-single-byte streams (the widen path), mixed lengths, and values
+    up to 2**64-1 (ten-byte varints)."""
+    rng = np.random.default_rng(32)
+    for n in REF_NS:
+        small = rng.integers(0, 128, size=n, dtype=np.uint64)
+        mixed = rng.integers(0, 128, size=n, dtype=np.uint64)
+        mixed[::3] = rng.integers(0, 2**21, size=mixed[::3].size,
+                                  dtype=np.uint64)
+        wide = rng.integers(0, 2**64 - 1, size=n, dtype=np.uint64,
+                            endpoint=True)
+        wide[::4] = 2**64 - 1
+        wide[1::4] = 0
+        for vals in (small, mixed, wide):
+            buf = codec.encode_varints(vals)
+            _assert_same(codec.decode_varints(buf), ref.decode_varints(buf))
+            _assert_same(codec.decode_varints(buf), vals)
+            tagged = b"\x56" + buf
+            _assert_same(codec.decode_best(tagged), ref.decode_best(tagged))
+
+
+def test_bitpack_decode_peak_memory():
+    """A benchmark position block's shape: 30,000 width-11 values. The
+    decode's traced peak stays below 12x the output; the bit-matrix
+    decode peaks near 25x."""
+    vals = np.random.default_rng(33).integers(
+        0, 2**11, size=30_000, dtype=np.uint64)
+    vals[0] = 2**11 - 1
+    buf = codec.encode_bitpack(vals)
+    tracemalloc.start()
+    try:
+        out = codec.decode_bitpack(buf)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    _assert_same(out, vals)
+    assert peak < 12 * out.nbytes, peak / out.nbytes

@@ -11,6 +11,7 @@ import pytest
 
 from hadoopsearchengine_spark.kernel.codec import (
     decode_deltas, decode_positions, decode_tfs)
+from tests import codec_reference as ref
 
 
 @pytest.fixture(scope="module")
@@ -99,6 +100,27 @@ def test_postings_decode_to_oracle(tables, oracle_index):
         np.testing.assert_array_equal(tfs[body], want_tfs, err_msg=term)
         np.testing.assert_array_equal(poss, want_pos, err_msg=term)
     assert seen_terms == set(oracle_index.terms)
+
+
+def test_blocks_decode_identical_to_reference(tables):
+    """Every block's doc-gap, tf, field-tf and position streams decode to
+    the same arrays with the shipped decoders as with the reference ones
+    (tests/codec_reference.py), on real builder output of both codecs."""
+    p = tables["postings"]
+    tf_cols = ("tfs", "title_tfs", "anchor_tfs", "meta_tfs", "alt_tfs")
+    tags = set()
+    for row in zip(p["doc_gaps"], p["positions"], *(p[c] for c in tf_cols)):
+        gaps, positions, tf_bufs = row[0], row[1], row[2:]
+        for got, want in [(decode_deltas(gaps), ref.decode_deltas(gaps))] + [
+                (decode_tfs(buf), ref.decode_tfs(buf)) for buf in tf_bufs]:
+            assert got.dtype == want.dtype
+            np.testing.assert_array_equal(got, want)
+        counts = ref.decode_tfs(tf_bufs[0]).astype(np.int64)
+        np.testing.assert_array_equal(
+            decode_positions(positions, counts),
+            ref.decode_positions(positions, counts))
+        tags.update(buf[0] for buf in row if buf)
+    assert tags == {0x42, 0x56}, "index should hold bitpack and varint streams"
 
 
 def test_field_streams_decode(tables, oracle_index):
