@@ -17,36 +17,25 @@ topology as a library:
   arrays in the one gather process (~16 TB at 10^12 docs — r4 verdict
   What's-wrong №3); r5 makes the doc tier partitionable, so NO process holds
   arrays sized by the full corpus.
-- ``ShardedQueryEngine`` — the coordinator: scatters a query to every term
-  shard, routes the returned per-doc BM25 contributions to the doc shards
-  that own them (the gather is associative: per-doc sums are complete
-  within one doc shard because doc shards partition the doc-id space, and
-  the global top-k is contained in the union of per-shard top-k), merges
-  the per-doc-shard candidate lists and ranks.
-
-Two scatter disciplines, both rank-identical to the single engine (pinned
-by tests/test_sharded.py over the reference query set plus fuzz):
-
-- exhaustive (default): every shard scores all its query-term blocks —
-  simple, one round trip, the r4 behavior.
-- ``prune=True`` — gather-fed theta (r4 verdict Next №4): shards first
-  return block METADATA only (min_doc/max_doc/max_score — the same segment
-  bounds the reference ships to the query server, SearchHitItems.h:131-254);
-  the gather merges them into the single engine's O(B log B) range sweep
-  and requests decode+score per doc range ONLY while the range's summed
-  block-max bound can still beat the current k-th score (theta). Since the
-  union of the term shards' blocks is exactly the single engine's block
-  set, the sweep admits the same ranges and the prune stays rank-exact by
-  the same argument (wand.py). Each round trip carries theta implicitly —
-  in a real deployment the gather batches admitted ranges per shard and
-  attaches the current theta so shards skip ranges that died in flight.
+- ``ShardedQueryEngine`` — the coordinator, one gather rank-identical to
+  the single engine (tests/test_sharded.py). Each term shard opens a
+  scatter handle carrying its block METADATA (min_doc/max_doc/max_score,
+  SearchHitItems.h:131-254). ``operators.wand.wand_topk``, the core the
+  single engine runs over its one handle, merges them into one range sweep
+  and has the shards decode and score a doc range only while its summed
+  block-max bound can reach the k-th score (theta). The term shards'
+  blocks together are the single engine's, so the prune stays rank-exact.
+  The doc shards turn a range's contributions into prior-weighted totals,
+  each doc's sum complete in the one doc shard that owns it. A deployment
+  would batch admitted ranges per shard and attach theta, so shards skip
+  ranges that died in flight.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .wand import EPS, QueryEngine, merge_topk, sweep_range_bounds
+from .wand import QueryEngine, dedup_cut, prior_totals, wand_topk
 
 
 def _max_doc_id(index_dir: str) -> int:
@@ -106,15 +95,7 @@ class DocShard:
         Complete per doc — doc shards partition the id space, so every
         contribution for a doc lands here and nowhere else."""
         mask = (d >= self.lo) & (d < self.hi)
-        if not mask.any():
-            return (np.empty(0, dtype=np.int64),
-                    np.empty(0, dtype=np.float64))
-        dd = d[mask]
-        uniq, inv = np.unique(dd, return_inverse=True)
-        tot = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(tot, inv, c[mask])
-        tot *= self.prior[uniq - self.lo]
-        return uniq, tot
+        return prior_totals(d[mask], c[mask], self.prior, self.lo)
 
     def fps(self, doc_ids: np.ndarray) -> np.ndarray:
         """Content checksums for doc_ids (all must lie in [lo, hi))."""
@@ -129,35 +110,17 @@ class ShardedQueryEngine:
     ``n_doc_shards`` doc-range gather partitions.
 
     Engine kwargs (preload / result_cache / decode_cache) pass through to
-    every term shard. Supports the context-manager protocol; ``close()``
-    shuts down the optional scatter thread pool (r4 ADVICE: the pool leaked
-    n_shards threads per instance in long-lived processes)."""
+    every term shard. The shards run in this process, one after another;
+    a deployment runs them as separate servers."""
 
     def __init__(self, index_dir: str, n_shards: int = 4,
-                 n_doc_shards: int = 1, parallel: bool = False,
-                 **engine_kwargs):
-        """``parallel=True`` scatters via a thread pool — one thread per
-        shard, the shape of the reference's concurrent per-division
-        servers. Results are bit-identical to the sequential scatter (the
-        gather is order-insensitive: np.unique + add.at over the
-        concatenated parts). MEASURED honesty: in ONE process the scatter
-        path interleaves numpy kernels with python-level block iteration
-        that holds the GIL, so threads LOSE at sandbox scales (24k pages:
-        2.1 ms sequential vs 3.3 ms threaded p50) — the option exists to
-        model the topology; a real deployment runs shards as separate
-        processes/servers where the overlap is genuine, and the default
-        stays sequential."""
+                 n_doc_shards: int = 1, **engine_kwargs):
         if n_shards < 1:
             raise ValueError("n_shards must be >= 1")
         if n_doc_shards < 1:
             raise ValueError("n_doc_shards must be >= 1")
         self.index_dir = index_dir
         self.n_shards = n_shards
-        self.parallel = parallel
-        self._pool = None
-        if parallel and n_shards > 1:
-            from concurrent.futures import ThreadPoolExecutor
-            self._pool = ThreadPoolExecutor(max_workers=n_shards)
         self.shards = [
             QueryEngine(index_dir, shard=(i, n_shards), **engine_kwargs)
             for i in range(n_shards)]
@@ -170,131 +133,37 @@ class ShardedQueryEngine:
                                     int(edges[i + 1]))
                            for i in range(n_doc_shards)]
         self.n_doc_shards = n_doc_shards
-        # per-search instrumentation: blocks decoded+scored per term shard
-        # (prune-rate evidence for the gather-fed-theta path)
+        # blocks scored per term shard in the last search (prune evidence)
         self.last_blocks_scored: list[int] = []
 
-    # -- lifecycle -----------------------------------------------------
-
-    def close(self):
-        if self._pool is not None:
-            self._pool.shutdown(wait=False)
-            self._pool = None
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.close()
-        return False
-
-    def __del__(self):
-        try:
-            self.close()
-        except Exception:
-            pass
-
-    # -- search --------------------------------------------------------
-
-    def _dedup_cut(self, order_docs, order_scores, order_fps, k):
-        """Checksum dedup over the same 4k+8 over-fetch window the single
-        engine uses — NOT the full exhaustive ranking — so the two paths
-        return identical results even when more than 4k+8 checksum-identical
-        docs outrank the distinct ones."""
-        out, seen = [], set()
-        for did, sc, fp in zip(order_docs, order_scores, order_fps):
-            fp = int(fp)
-            if fp in seen:
-                continue
-            seen.add(fp)
-            out.append((int(did), float(sc)))
-            if len(out) == k:
-                break
-        return out
-
     def search(self, query: str, k: int = 10, dedup: bool = False,
-               prune: bool = False) -> list[tuple[int, float]]:
+               prune: bool = True) -> list[tuple[int, float]]:
         """[(doc_id, score)] score desc / doc_id asc, len <= k — the same
         contract as QueryEngine.search (plain-BM25 path; the boost/proximity
         variants need cross-term state that lives naturally in one engine —
         route those queries to an unsharded engine or extend the scatter
         payload). dedup=True collapses checksum-identical docs keeping the
-        best-ranked, using the doc tier's checksums. prune=True runs the
-        gather-fed-theta scatter (module docstring) — rank-identical,
-        decodes only the blocks the single-engine WAND would."""
+        best-ranked, using the doc tier's checksums. prune=False scores
+        every range, as in QueryEngine.search."""
         if k < 1:
             return []
-        if prune:
-            return self._search_pruned(query, k, dedup)
-        if self._pool is not None:
-            parts = list(self._pool.map(
-                lambda s: s.shard_contributions(query), self.shards))
-        else:
-            parts = [s.shard_contributions(query) for s in self.shards]
-        self.last_blocks_scored = []
-        ds = [p[0] for p in parts if p[0].size]
-        if not ds:
-            return []
-        d = np.concatenate(ds)
-        c = np.concatenate([p[1] for p in parts if p[0].size])
-        # gather: doc shards partition the id space, so each one's per-doc
-        # totals are complete and merge straight into the global top-m
-        m = 4 * k + 8 if dedup else k
-        top_d = np.empty(0, dtype=np.int64)
-        top_s = np.empty(0, dtype=np.float64)
-        for sh in self.doc_shards:
-            top_d, top_s = merge_topk(top_d, top_s,
-                                      *sh.weighted_totals(d, c), m)
-        return self._ranked(top_d, top_s, k, dedup)
+        parts = [(s, h) for s in self.shards
+                 if (h := s.open_scatter(query)) is not None]
+        top_d, top_s = wand_topk(parts, self._totals,
+                                 4 * k + 8 if dedup else k, prune)
+        self.last_blocks_scored = [h["blocks_scored"] for _, h in parts]
+        if dedup:
+            return dedup_cut(top_d, top_s, self._fps(top_d), k)
+        return [(int(d), float(s)) for d, s in zip(top_d, top_s)]
 
-    def _search_pruned(self, query: str, k: int,
-                       dedup: bool) -> list[tuple[int, float]]:
-        """Gather-fed theta: merge every shard's block metadata into ONE
-        global range sweep (identical bound set to the single engine, since
-        term shards partition the block set), process ranges in descending
-        upper-bound order, and ask shards to decode+score a range only when
-        its bound can still beat theta — the current k-th prior-weighted
-        score. Rank-exact for the same reason the single-engine WAND is:
-        every skipped range is provably below the k-th score (max_score
-        stores max(prior*contrib) per block, and per-doc totals are
-        complete per range because blocks partition doc ranges)."""
-        handles = [(s, s.open_scatter(query)) for s in self.shards]
-        handles = [(s, h) for s, h in handles if h is not None]
-        self.last_blocks_scored = []
-        if not handles:
-            return []
-        blk_min = np.concatenate([h["blk_min"] for _, h in handles])
-        blk_max = np.concatenate([h["blk_max"] for _, h in handles])
-        blk_ms = np.concatenate([h["blk_ms"] for _, h in handles])
-        bounds, range_ub = sweep_range_bounds(blk_min, blk_max, blk_ms)
-        range_order = np.argsort(-range_ub, kind="stable")
-        m = 4 * k + 8 if dedup else k
-        top_d = np.empty(0, dtype=np.int64)
-        top_s = np.empty(0, dtype=np.float64)
-        for ri in range_order:
-            ub = float(range_ub[ri])
-            lo, hi = int(bounds[ri]), int(bounds[ri + 1])
-            if top_s.size == m and ub < top_s[-1] - EPS:
-                continue
-            parts = [s.score_range(h, lo, hi) for s, h in handles]
-            ds = [p[0] for p in parts if p[0].size]
-            if not ds:
-                continue
-            d = np.concatenate(ds)
-            c = np.concatenate([p[1] for p in parts if p[0].size])
-            for sh in self.doc_shards:
-                top_d, top_s = merge_topk(top_d, top_s,
-                                          *sh.weighted_totals(d, c), m)
-        self.last_blocks_scored = [h["blocks_scored"] for _, h in handles]
-        return self._ranked(top_d, top_s, k, dedup)
-
-    def _ranked(self, top_d: np.ndarray, top_s: np.ndarray, k: int,
-                dedup: bool) -> list[tuple[int, float]]:
-        """The result list from the ranked top-m arrays: as they are, or
-        cut to k checksum-distinct docs under dedup."""
-        if not dedup:
-            return [(int(d), float(s)) for d, s in zip(top_d, top_s)]
-        return self._dedup_cut(top_d, top_s, self._fps(top_d), k)
+    def _totals(self, d: np.ndarray, c: np.ndarray, _raw) \
+            -> tuple[np.ndarray, np.ndarray]:
+        """Per-doc prior-weighted totals from the doc tier: doc shards
+        partition the id space, so each one's totals are complete, and
+        concatenated in shard order they stay doc-id sorted."""
+        got = [sh.weighted_totals(d, c) for sh in self.doc_shards]
+        return (np.concatenate([u for u, _ in got]),
+                np.concatenate([t for _, t in got]))
 
     def _fps(self, doc_ids: np.ndarray) -> np.ndarray:
         """Content checksums routed to the owning doc shards."""

@@ -15,14 +15,14 @@ Two paths, both rank-identical to the oracle:
   the stored block max is ``max(prior * contrib)`` which upper-bounds every
   doc's per-term share of ``prior * Σ contrib``.
 
-  Candidate selection is a block at a time too. The running top-k is two
-  sorted numpy arrays (doc ids, scores); each admitted range's per-doc
-  totals merge into it in one vectorized select (``merge_topk``). Ranges
-  are disjoint doc intervals, so this is the exact top-k under (score desc,
-  doc_id asc). Proximity queries visit a range's candidates in descending
-  BM25 total and stop at the first whose total times the largest proximity
-  multiplier (``1 + PROX_ALPHA``) falls below the live k-th score, so the
-  exact min-span runs only for docs that can still enter the top k.
+  One scoring core, ``wand_topk``, ranks for the single and the sharded
+  engine (operators/sharded.py): it merges the query handles of one or
+  more engines (``QueryEngine.open_scatter``) into one range sweep and
+  asks each engine's ``score_range`` for the ranges it admits; the single
+  engine is the one-handle case. The running top-k is two sorted numpy
+  arrays, and each range's per-doc totals (``prior_totals``) merge into it
+  in one vectorized select (``merge_topk``). Proximity queries stop a
+  range's candidates at the first whose bound misses the k-th score.
 
 - ``bm25_topk_df`` (distributed): plain DataFrame join/agg scoring for
   driver-verifiable parity and for batch query workloads.
@@ -32,6 +32,8 @@ The per-query engine is what the p95-latency benchmark measures (SURVEY §3.2:
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 
@@ -43,12 +45,13 @@ from ..kernel.tokenize import tokenize
 # the actual score (different summation orders), keeping every prune
 # rank-exact including ties
 EPS = 1e-9
+# score_range's (doc_ids, contribs, raw_tfs) for a range with no match
+_NONE = (np.empty(0, dtype=np.int64), np.empty(0), np.empty(0))
 
 
 class _LRU:
-    """Minimal bounded cache with dict-like get/set (the decode caches were
-    unbounded dicts in r2 — fine while the block table is pinned, but a cap
-    is required before the preload=False tier reuses them, r2 verdict)."""
+    """Minimal bounded LRU cache with dict-like get/set; cap 0 keeps
+    nothing."""
 
     def __init__(self, cap: int):
         import collections
@@ -127,6 +130,103 @@ def merge_topk(top_d: np.ndarray, top_s: np.ndarray, d: np.ndarray,
     return d[order], s[order]
 
 
+def _cat(arrays: list) -> np.ndarray:
+    """np.concatenate, passing a lone array through without a copy."""
+    return arrays[0] if len(arrays) == 1 else np.concatenate(arrays)
+
+
+def prior_totals(d: np.ndarray, c: np.ndarray, prior: np.ndarray,
+                 base: int, raw: np.ndarray | None = None) \
+        -> tuple[np.ndarray, np.ndarray]:
+    """-> (unique doc ids, prior * summed contribs) of the contributions
+    ``(d, c)``; ``prior`` is dense over doc ids from ``base``. Given the
+    matched rows' body tfs ``raw``, docs where any of them exceeds
+    SPAM_TF_CAP score 0 (keyword stuffing, HitScore.h:250-253)."""
+    uniq, inv = np.unique(d, return_inverse=True)
+    tot = np.zeros(len(uniq), dtype=np.float64)
+    np.add.at(tot, inv, c)
+    tot *= prior[uniq - base]
+    if raw is not None:
+        mx = np.zeros(len(uniq), dtype=np.float64)
+        np.maximum.at(mx, inv, raw)
+        tot[mx > bm25.SPAM_TF_CAP] = 0.0
+    return uniq, tot
+
+
+def dedup_cut(top_d, top_s, fps, k: int) -> list[tuple[int, float]]:
+    """The first ``k`` checksum-distinct entries of a ranked list, given
+    its content checksums ``fps`` (CompileRankedList.h:206-242). Both
+    engines cut the same 4k+8 over-fetch window, so they agree even when
+    more than 4k+8 checksum-identical docs outrank the distinct ones."""
+    out, seen = [], set()
+    for did, sc, fp in zip(top_d, top_s, fps):
+        fp = int(fp)
+        if fp in seen:
+            continue
+        seen.add(fp)
+        out.append((int(did), float(sc)))
+        if len(out) == k:
+            break
+    return out
+
+
+def wand_topk(parts: list, totals, k: int, prune: bool = True,
+              boost_cap: float = 1.0, positions=None) \
+        -> tuple[np.ndarray, np.ndarray]:
+    """-> (doc_ids, scores): the exact top ``k >= 1`` (score desc, doc_id
+    asc) over the scatter handles ``parts = [(engine, handle)]``.
+
+    All handles' block bounds go into one range sweep, visited in
+    descending upper bound (ties in doc order) so theta, the live k-th
+    score, rises fast. Unless ``prune`` is False, a range whose bound times
+    ``boost_cap`` (the largest boost factor) misses theta is skipped. Every
+    engine's ``score_range`` scores an admitted range, and ``totals(doc_ids,
+    contribs, raw_tfs) -> (uniq, tot)`` reduces it to prior-weighted
+    per-doc scores. Given ``positions(doc, lo, hi)``, each total is scaled
+    by the proximity multiplier, in descending total until the bound
+    misses theta."""
+    top_d = np.empty(0, dtype=np.int64)
+    top_s = np.empty(0, dtype=np.float64)
+    if not parts:
+        return top_d, top_s
+    hs = [h for _, h in parts]
+    bounds, range_ub = sweep_range_bounds(
+        _cat([h["blk_min"] for h in hs]), _cat([h["blk_max"] for h in hs]),
+        _cat([h["blk_ms"] for h in hs]))
+    for ri in np.argsort(-range_ub, kind="stable"):
+        ub, lo, hi = (float(range_ub[ri]), int(bounds[ri]),
+                      int(bounds[ri + 1]))
+        theta = top_s[-1] if top_s.size == k else -np.inf
+        if prune and ub * boost_cap < theta - EPS:
+            continue  # no doc in this range can beat/tie the k-th score
+        got = []
+        for e, h in parts:
+            g = e.score_range(h, lo, hi)
+            if g[0].size:
+                got.append(g)
+        if not got:
+            continue
+        d, c, r = (got[0] if len(got) == 1 else
+                   (np.concatenate(x) for x in zip(*got)))
+        uniq, tot = totals(d, c, r)
+        if positions is None:
+            top_d, top_s = merge_topk(top_d, top_s, uniq, tot, k)
+            continue
+        # tot is the exact score before the multiplier, which is at most
+        # 1 + PROX_ALPHA: in descending tot order, the first candidate
+        # whose bound misses the live k-th score ends the range for every
+        # candidate after it
+        bound = tot * (1.0 + bm25.PROX_ALPHA)
+        for j in np.argsort(-tot, kind="stable"):
+            if prune and top_s.size == k and bound[j] < top_s[-1] - EPS:
+                break
+            score = float(tot[j]) * bm25.proximity_multiplier(
+                positions(int(uniq[j]), lo, hi))
+            top_d, top_s = merge_topk(top_d, top_s, uniq[j:j + 1],
+                                      np.array([score]), k)
+    return top_d, top_s
+
+
 class QueryEngine:
     """Warm local query path over a built index directory.
 
@@ -140,8 +240,7 @@ class QueryEngine:
 
     # plain-BM25 needs only the core columns; the field-tf streams, the
     # field-weighted block max and the position payloads load LAZILY on the
-    # first query that uses them (r3: the r2 engine preloaded all 14 columns
-    # unconditionally, and plain-BM25 p95 paid for streams it never read)
+    # first query that uses them, so plain-BM25 never pays for them
     _CORE_COLS = ["term_id", "block_no", "min_doc", "max_doc", "n_docs",
                   "max_score", "doc_gaps", "tfs"]
     _EXTRA_COLS = ["max_wscore", "positions", "title_tfs", "anchor_tfs",
@@ -155,20 +254,16 @@ class QueryEngine:
         (DyableRequest/WordDivision.h:133-160). A shard loads 1/n of the
         terms dictionary, 1/n of the posting blocks, and doc stats bounded
         to the doc-id span its blocks actually touch, so no single process
-        ever holds the full dictionaries (the r3 verdict's Missing №1 —
-        at 10^12 docs neither table fits one server). Compose shards with
-        operators.sharded.ShardedQueryEngine for a scatter-gather search
-        rank-identical to the single-engine path."""
-        import collections
+        ever holds the full dictionaries (at 10^12 docs neither table fits
+        one server). operators.sharded.ShardedQueryEngine composes shards
+        into a search rank-identical to the single engine."""
         import pyarrow.parquet as pq
         self.index_dir = index_dir
         self.shard = shard
         # query-result LRU (the reference's per-server result cache tier,
         # DyableRequest/** — r1 shipped only the decoded-block cache).
         # Keyed by the full scoring configuration; 0 disables.
-        self._res_cache: "collections.OrderedDict[tuple, list]" = (
-            collections.OrderedDict())
-        self._res_cache_size = int(result_cache)
+        self._res_cache = _LRU(result_cache)
         self.result_cache_hits = 0
         t = pq.read_table(f"{index_dir}/terms").to_pandas()
         if shard is not None:
@@ -189,8 +284,7 @@ class QueryEngine:
         self._extra_loaded = False
         # engine-level decode caches (preload mode only): decoded gap/tf and
         # position arrays survive across queries, so repeated terms skip
-        # payload decode entirely. LRU-capped (decoded arrays are ~2-3x the
-        # payload bytes; cap 0 disables caching).
+        # payload decode. LRU-capped (decoded arrays are ~2-3x the payload).
         self._dec_plain = _LRU(decode_cache)
         self._dec_title = _LRU(decode_cache)
         self._dec_fields = _LRU(decode_cache)
@@ -272,9 +366,9 @@ class QueryEngine:
         self._extra_loaded = True
 
     def _load_blocks(self, term_ids: list[int], need_extra: bool):
-        """-> (cols, rows, gkeys): ``cols`` is a dict[col -> np.ndarray],
-        ``rows`` indexes the query's blocks within it, ``gkeys`` are stable
-        cross-query cache keys (None in the per-query read tier)."""
+        """-> (cols, rows, preloaded): ``rows`` index the query's blocks in
+        ``cols`` (dict[col -> np.ndarray]); when ``preloaded`` that is the
+        pinned block store, so rows are stable cross-query cache keys."""
         if self._blocks is not None:
             if need_extra:
                 self._ensure_extra()
@@ -283,7 +377,7 @@ class QueryEngine:
                       if t in self._ranges)]
             rows = (np.concatenate(spans) if spans
                     else np.empty(0, dtype=np.int64))
-            return self._blocks, rows, rows
+            return self._blocks, rows, True
         import pyarrow.parquet as pq
         cols = self._CORE_COLS + (self._EXTRA_COLS if need_extra else [])
         df = pq.read_table(
@@ -295,7 +389,7 @@ class QueryEngine:
         df.sort_values(["term_id", "block_no"], kind="mergesort",
                        inplace=True, ignore_index=True)
         V = {c: df[c].to_numpy() for c in df.columns}
-        return V, np.arange(len(df), dtype=np.int64), None
+        return V, np.arange(len(df), dtype=np.int64), False
 
     def _load_assoc(self) -> dict:
         if self._assoc is None:
@@ -373,225 +467,51 @@ class QueryEngine:
         Pruning stays rank-exact: each block's upper bound carries its
         term's weight.
 
-        Candidates are selected a range at a time: each admitted range's
-        per-doc totals merge into the running top-k in one vectorized
-        select (``merge_topk``). Under proximity=True a range's candidates
-        are visited in descending BM25 total, and the visit stops at the
-        first whose total times ``1 + PROX_ALPHA`` (the largest multiplier)
-        falls below the live k-th score, so the exact min-span is computed
-        only for docs that can still enter the top k. prune=False skips
-        neither ranges nor candidates: it scores every matching doc exactly
-        and is the reference the pruned path is tested against."""
+        The ranking is ``wand_topk`` over this engine's one scatter handle,
+        the core the sharded engine runs over its term shards. prune=False
+        skips neither ranges nor proximity candidates: it scores every
+        matching doc exactly and is the reference the pruned path is tested
+        against."""
         if title_boost and field_boost:
             raise ValueError("field_boost already includes the title field")
         if k < 1:
             return []
         ck = (query, k, prune, proximity, title_boost, field_boost,
               spam_cap, dedup, expand, expand_damp)
-        if self._res_cache_size:
-            got = self._res_cache.get(ck)
-            if got is not None:
-                self._res_cache.move_to_end(ck)
-                self.result_cache_hits += 1
-                return list(got)
-
-        def store(res):
-            if self._res_cache_size:
-                self._res_cache[ck] = list(res)
-                if len(self._res_cache) > self._res_cache_size:
-                    self._res_cache.popitem(last=False)
-            return res
-
+        got = self._res_cache.get(ck)
+        if got is not None:
+            self.result_cache_hits += 1
+            return list(got)
+        res = []
         if dedup:
             # over-fetch, cut checksum-dups keeping the best-ranked, truncate
             inner = self.search(query, k=4 * k + 8, prune=prune,
                                 proximity=proximity, title_boost=title_boost,
                                 field_boost=field_boost, spam_cap=spam_cap,
                                 expand=expand, expand_damp=expand_damp)
-            seen: set[int] = set()
-            out = []
-            for did, sc in inner:
-                fp = int(self.text_fp[did - self._doc_base])
-                if fp in seen:
-                    continue
-                seen.add(fp)
-                out.append((did, sc))
-                if len(out) == k:
-                    break
-            return store(out)
-        tids, idfs = self._query_tids(query)
-        if not tids:
-            return store([])
-        tweight = {t: 1.0 for t in tids}
-        if expand > 0:
-            for atid, w in sorted(
-                    self._expanded_terms(tids, expand, expand_damp).items()):
-                tweight[atid] = w
-                idfs[atid] = float(bm25.idf(
-                    int(self._df_by_id.get(atid, 0)), self.n_docs))
-                tids.append(atid)
-        need_extra = field_boost or title_boost or proximity
-        V, rows, gkeys = self._load_blocks(tids, need_extra)
-        if rows.size == 0:
-            return store([])
-
-        # block-aligned candidate ranges: boundaries from all blocks' bounds
-        blk_min = V["min_doc"][rows]
-        blk_max = V["max_doc"][rows]
-
-        # field-weighted queries prune against the weighted block max —
-        # body max_score does NOT bound anchor-/meta-only docs (tf=0 rows)
-        blk_ms = V["max_wscore" if field_boost else "max_score"][rows]
-        if expand > 0:
-            # expanded terms contribute damped scores; their block bounds
-            # carry the same weight, so pruning stays rank-exact
-            blk_ms = blk_ms * np.array(
-                [tweight[int(t)] for t in V["term_id"][rows]])
-
-        # running top-k, sorted (score desc, doc_id asc)
-        top_d = np.empty(0, dtype=np.int64)
-        top_s = np.empty(0, dtype=np.float64)
-
-        # O(B log B) range sweep (r3 verdict №4; rationale on the module
-        # helpers). Block lists are computed LAZILY, only for ranges the
-        # prune admits.
-        bounds, range_ub = sweep_range_bounds(blk_min, blk_max, blk_ms)
-        # descending upper bound, ties in ascending range order (matches the
-        # r3 stable sort) so theta rises fast and results stay byte-identical
-        range_order = np.argsort(-range_ub, kind="stable")
-
-        term_ids_arr = V["term_id"][rows]
-        # per-term contiguous runs in rows-coordinates
-        t_begin = np.flatnonzero(
-            np.r_[True, term_ids_arr[1:] != term_ids_arr[:-1]])
-        t_end = np.append(t_begin[1:], term_ids_arr.size)
-        # cross-query caches when preloaded (keyed by global row id); private
-        # per-call dicts otherwise
-        has_gidx = gkeys is not None
-        dec_cache = ((self._dec_fields if field_boost
-                      else self._dec_title if title_boost
-                      else self._dec_plain) if has_gidx else {})
-        pos_cache = self._dec_positions if has_gidx else {}
-        boost_cap = 1.0 + (bm25.PROX_ALPHA if proximity else 0.0)
-        if title_boost:
-            boost_cap *= bm25.W_TITLE  # contrib(weighted tf) <= W * contrib
-        # (field_boost needs no cap: blk_ms is already the weighted max)
-
-        def ensure_decoded(bi: int):
-            """-> (doc_ids, scoring tfs, raw body tfs) for block bi."""
-            key = int(gkeys[bi]) if has_gidx else bi
-            got = dec_cache.get(key)
-            if got is None:
-                g = rows[bi]
-                ids = decode_deltas(V["doc_gaps"][g])
-                raw = decode_tfs(V["tfs"][g]).astype(np.float64)
-                if field_boost:
-                    tfs = bm25.weighted_tf(
-                        raw,
-                        decode_tfs(V["title_tfs"][g]).astype(np.float64),
-                        decode_tfs(V["anchor_tfs"][g]).astype(np.float64),
-                        decode_tfs(V["meta_tfs"][g]).astype(np.float64),
-                        decode_tfs(V["alt_tfs"][g]).astype(np.float64))
-                elif title_boost:
-                    ttfs = decode_tfs(V["title_tfs"][g]).astype(np.float64)
-                    tfs = raw + (bm25.W_TITLE - 1.0) * ttfs
-                else:
-                    tfs = raw
-                got = dec_cache[key] = (ids, tfs, raw)
-            return got
-
-        def ensure_positions(bi: int, raw_tfs: np.ndarray):
-            """-> (positions, per-doc offsets) for block bi; ``raw_tfs`` is
-            the block's decoded body tf array from ensure_decoded (raw tf
-            counts, NOT the title-weighted tfs, frame positions)."""
-            key = int(gkeys[bi]) if has_gidx else bi
-            got = pos_cache.get(key)
-            if got is None:
-                from ..kernel.codec import decode_positions
-                pos = decode_positions(V["positions"][rows[bi]], raw_tfs)
-                offsets = np.concatenate(
-                    ([0], np.cumsum(raw_tfs))).astype(np.int64)
-                got = pos_cache[key] = (pos, offsets)
-            return got
-
-        def doc_positions(doc_id: int, block_idx) -> list:
-            """Per matched term, the doc's ascending position array."""
-            out = []
-            for bi in block_idx:
-                ids, _tfs, raw = ensure_decoded(int(bi))
-                j = int(np.searchsorted(ids, doc_id))
-                if j < len(ids) and ids[j] == doc_id:
-                    pos, offs = ensure_positions(int(bi), raw)
-                    seg = pos[offs[j]:offs[j + 1]]
-                    if len(seg):  # tf=0 (anchor-only) rows have no positions
-                        out.append(seg)
-            return out
-
-        self.blocks_scored = 0  # instrumentation for prune-rate tests
-        self.blocks_total = int(rows.size)
-        for ri in range_order:
-            ub, lo, hi = (float(range_ub[ri]), int(bounds[ri]),
-                          int(bounds[ri + 1]))
-            theta = top_s[-1] if top_s.size == k else -np.inf
-            if prune and ub * boost_cap < theta - EPS:
-                continue  # no doc in this range can beat/tie the k-th score
-            idx = blocks_in_range(t_begin, t_end, blk_min, blk_max, lo, hi)
-            all_d, all_c, all_r = [], [], []
-            for bi in idx:
-                ids, tfs, raw = ensure_decoded(int(bi))
-                l = int(np.searchsorted(ids, lo))
-                r = int(np.searchsorted(ids, hi))
-                if l == r:
-                    continue
-                dids, btfs, braw = ids[l:r], tfs[l:r], raw[l:r]
-                if not field_boost:
-                    # tf=0 rows (anchor-/meta-only hits) are not matches
-                    # under body scoring — the round-1 contract unchanged
-                    nz = np.flatnonzero(braw > 0)
-                    if len(nz) == 0:
-                        continue
-                    if len(nz) < len(dids):
-                        dids, btfs, braw = dids[nz], btfs[nz], braw[nz]
-                all_d.append(dids)
-                all_r.append(braw)
-                tid = int(term_ids_arr[bi])
-                c = bm25.contrib(btfs,
-                                 self.doc_len[dids - self._doc_base],
-                                 self.avgdl,
-                                 idfs[tid])
-                all_c.append(c if tweight[tid] == 1.0 else c * tweight[tid])
-            if not all_d:
-                continue
-            self.blocks_scored += len(all_d)
-            d = np.concatenate(all_d)
-            c = np.concatenate(all_c)
-            uniq, inv = np.unique(d, return_inverse=True)
-            tot = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(tot, inv, c)
-            tot *= self.prior[uniq - self._doc_base]
-            if spam_cap:
-                # zero docs where any matched term's body tf > SPAM_TF_CAP
-                mx = np.zeros(len(uniq), dtype=np.float64)
-                np.maximum.at(mx, inv, np.concatenate(all_r))
-                tot[mx > bm25.SPAM_TF_CAP] = 0.0
-            if not proximity:
-                top_d, top_s = merge_topk(top_d, top_s, uniq, tot, k)
-                continue
-            # tot is the exact score before the multiplier, which is at
-            # most 1 + PROX_ALPHA: in descending tot order, the first
-            # candidate whose bound misses the live k-th score ends the
-            # range for every candidate after it
-            bound = tot * (1.0 + bm25.PROX_ALPHA)
-            for j in np.argsort(-tot, kind="stable"):
-                if (prune and top_s.size == k
-                        and bound[j] < top_s[-1] - EPS):
-                    break
-                score = float(tot[j]) * bm25.proximity_multiplier(
-                    doc_positions(int(uniq[j]), idx))
-                top_d, top_s = merge_topk(top_d, top_s, uniq[j:j + 1],
-                                          np.array([score]), k)
-
-        return store([(int(d), float(s)) for d, s in zip(top_d, top_s)])
+            res = dedup_cut([d for d, _ in inner], [s for _, s in inner],
+                            (self.text_fp[d - self._doc_base]
+                             for d, _ in inner), k)
+        elif (h := self.open_scatter(query, title_boost, field_boost,
+                                     proximity, expand,
+                                     expand_damp)) is not None:
+            boost_cap = 1.0 + (bm25.PROX_ALPHA if proximity else 0.0)
+            if title_boost:
+                boost_cap *= bm25.W_TITLE  # contrib(weighted tf) <= W * contrib
+            # (field_boost needs no cap: its bound is the weighted max)
+            top_d, top_s = wand_topk(
+                [(self, h)],
+                lambda d, c, r: prior_totals(d, c, self.prior,
+                                             self._doc_base,
+                                             r if spam_cap else None),
+                k, prune, boost_cap,
+                partial(self.doc_positions, h) if proximity else None)
+            # instrumentation for prune-rate tests
+            self.blocks_scored = h["blocks_scored"]
+            self.blocks_total = int(h["rows"].size)
+            res = [(int(d), float(s)) for d, s in zip(top_d, top_s)]
+        self._res_cache[ck] = list(res)
+        return res
 
     def did_you_mean(self, query: str, max_dist: int = 2,
                      topn: int = 1) -> dict[str, list[tuple[str, int, int]]]:
@@ -619,132 +539,147 @@ class QueryEngine:
                 for t in qterms if t in self.term_id}
         return tids, idfs
 
-    def open_scatter(self, query: str):
-        """Open a range-at-a-time scatter handle — the shard half of the
-        gather-fed-theta protocol (r4 verdict Next №4; the latency upgrade
-        the r4 sharded tier documented but served exhaustively). The handle
-        carries this shard's block METADATA for the query (min_doc/max_doc/
-        max_score per block — bytes-tiny: the reference ships the same
-        segment bounds to the query server, SearchHitItems.h:131-254) plus
-        lazy decode state. The gather tier merges every shard's metadata
-        into the SAME global range sweep the single engine runs, then calls
-        ``score_range`` only for ranges whose summed block-max upper bound
-        can still beat the current k-th score — so each shard decodes
-        exactly the blocks the single-engine WAND would have. Returns None
-        when no query term lands on this shard."""
+    def open_scatter(self, query: str, title_boost: bool = False,
+                     field_boost: bool = False, proximity: bool = False,
+                     expand: int = 0, expand_damp: float = 0.3):
+        """The query's scatter handle on this engine (options as in
+        ``search``), or None when no query block lands here: block METADATA
+        (min_doc/max_doc and the block max times the term's weight — the
+        segment bounds the reference ships to the query server,
+        SearchHitItems.h:131-254), term ids, idfs and weights, the decode
+        caches of the scoring mode (the engine's LRUs when preloaded, else
+        per-query dicts) and a ``blocks_scored`` counter."""
         tids, idfs = self._query_tids(query)
         if not tids:
             return None
-        V, rows, gkeys = self._load_blocks(tids, False)
+        weight = {t: 1.0 for t in tids}
+        if expand > 0:
+            for atid, w in sorted(
+                    self._expanded_terms(tids, expand, expand_damp).items()):
+                weight[atid] = w
+                idfs[atid] = float(bm25.idf(
+                    int(self._df_by_id.get(atid, 0)), self.n_docs))
+                tids.append(atid)
+        V, rows, preloaded = self._load_blocks(
+            tids, field_boost or title_boost or proximity)
         if rows.size == 0:
             return None
-        term_ids_arr = V["term_id"][rows]
-        t_begin = np.flatnonzero(
-            np.r_[True, term_ids_arr[1:] != term_ids_arr[:-1]])
-        t_end = np.append(t_begin[1:], term_ids_arr.size)
+        term_ids = V["term_id"][rows]
+        # block max = max(prior * contrib) (plans/build_index.py); field-
+        # weighted queries need the weighted one: body max_score does NOT
+        # bound anchor-/meta-only docs (tf=0 rows)
+        blk_ms = V["max_wscore" if field_boost else "max_score"][rows]
+        if expand > 0:
+            # expanded terms contribute damped scores; their block bounds
+            # carry the same weight, so pruning stays rank-exact
+            blk_ms = blk_ms * np.array([weight[int(t)] for t in term_ids])
+        # per-term contiguous runs in rows-coordinates
+        t_begin = np.flatnonzero(np.r_[True, term_ids[1:] != term_ids[:-1]])
+        if not preloaded:
+            dec, pos = {}, {}
+        else:
+            dec = (self._dec_fields if field_boost else
+                   self._dec_title if title_boost else self._dec_plain)
+            pos = self._dec_positions
         return {
-            "V": V, "rows": rows, "gkeys": gkeys, "idfs": idfs,
-            "term_ids": term_ids_arr, "t_begin": t_begin, "t_end": t_end,
+            "V": V, "rows": rows, "term_ids": term_ids, "idfs": idfs,
+            "weight": weight, "t_begin": t_begin,
+            "t_end": np.append(t_begin[1:], term_ids.size),
             "blk_min": V["min_doc"][rows], "blk_max": V["max_doc"][rows],
-            # max_score already stores max(prior * contrib) per block
-            # (plans/build_index.py), so the gather's summed range bound
-            # upper-bounds every doc's full prior-weighted score — the same
-            # rank-exactness argument as the single-engine WAND
-            "blk_ms": V["max_score"][rows],
-            "blocks_scored": 0,
+            "blk_ms": blk_ms, "field_boost": field_boost,
+            "title_boost": title_boost, "dec": dec, "pos": pos,
+            "range": (None, None), "blocks_scored": 0,
         }
 
     def score_range(self, h: dict, lo: int, hi: int) \
-            -> tuple[np.ndarray, np.ndarray]:
-        """(doc_ids, contribs) of this shard's blocks overlapping doc range
-        [lo, hi) — raw per-term BM25 contributions, NO prior (the doc tier
-        owns priors and applies them at gather). Decoded payloads go through
-        the engine's cross-query ``_dec_plain`` LRU exactly like search()."""
-        idx = blocks_in_range(h["t_begin"], h["t_end"],
-                              h["blk_min"], h["blk_max"], lo, hi)
-        V, rows, gkeys = h["V"], h["rows"], h["gkeys"]
-        has_gidx = gkeys is not None
-        all_d, all_c = [], []
+            -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(doc_ids, contribs, raw body tfs) of the handle's blocks over doc
+        range [lo, hi): weighted BM25 contributions, NO prior. Rows of body
+        tf 0 (anchor-/meta-only hits) match only under field_boost. Each
+        block that contributes counts in ``h["blocks_scored"]``."""
+        idx = blocks_in_range(h["t_begin"], h["t_end"], h["blk_min"],
+                              h["blk_max"], lo, hi)
+        h["range"] = (lo, idx)  # the proximity cut reads it per candidate
+        dec, rows = h["dec"], h["rows"]
+        all_d, all_c, all_r = [], [], []
         for bi in idx:
-            bi = int(bi)
-            key = int(gkeys[bi]) if has_gidx else (id(h), bi)
-            got = self._dec_plain.get(key)
-            if got is None:
-                g = rows[bi]
-                ids = decode_deltas(V["doc_gaps"][g])
-                raw = decode_tfs(V["tfs"][g]).astype(np.float64)
-                got = (ids, raw, raw)
-                self._dec_plain[key] = got
-            ids, tfs, raw = got
+            g = int(rows[bi])
+            ids, tfs, raw = dec.get(g) or self._decode(h, g)
             l = int(np.searchsorted(ids, lo))
             r = int(np.searchsorted(ids, hi))
             if l == r:
                 continue
             dids, btfs, braw = ids[l:r], tfs[l:r], raw[l:r]
-            nz = np.flatnonzero(braw > 0)  # anchor-only rows: no body match
-            if nz.size == 0:
-                continue
-            if nz.size < dids.size:
-                dids, btfs = dids[nz], btfs[nz]
-            h["blocks_scored"] += 1
+            if not h["field_boost"]:
+                nz = np.flatnonzero(braw > 0)
+                if len(nz) == 0:
+                    continue
+                if len(nz) < len(dids):
+                    dids, btfs, braw = dids[nz], btfs[nz], braw[nz]
             all_d.append(dids)
-            all_c.append(bm25.contrib(btfs,
-                                      self.doc_len[dids - self._doc_base],
-                                      self.avgdl,
-                                      h["idfs"][int(h["term_ids"][bi])]))
+            all_r.append(braw)
+            tid = int(h["term_ids"][bi])
+            c = bm25.contrib(btfs, self.doc_len[dids - self._doc_base],
+                             self.avgdl, h["idfs"][tid])
+            w = h["weight"][tid]
+            all_c.append(c if w == 1.0 else c * w)
+        h["blocks_scored"] += len(all_d)
+        if len(all_d) == 1:  # pass a lone block's rows through uncopied
+            return all_d[0], all_c[0], all_r[0]
         if not all_d:
-            return (np.empty(0, dtype=np.int64),
-                    np.empty(0, dtype=np.float64))
-        return np.concatenate(all_d), np.concatenate(all_c)
+            return _NONE
+        return (np.concatenate(all_d), np.concatenate(all_c),
+                np.concatenate(all_r))
 
-    def shard_contributions(self, query: str) \
-            -> tuple[np.ndarray, np.ndarray]:
-        """Scatter half of the sharded serving topology: summed BM25
-        contributions ``(doc_ids, contribs)`` over the query terms THIS
-        engine holds — no prior, no top-k; the gather tier
-        (operators.sharded.ShardedQueryEngine) sums across shards, applies
-        the doc prior and ranks. Mirrors the reference's word-division
-        servers answering a retrieve server
-        (DyableRequest/WordDivision.h:133-160, SearchHitItems.h:296-311).
-        Shares the engine's decode caches with search(), plain-path
-        entries only."""
-        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-        tids, idfs = self._query_tids(query)
-        if not tids:
-            return empty
-        V, rows, gkeys = self._load_blocks(tids, False)
-        if rows.size == 0:
-            return empty
-        term_ids_arr = V["term_id"][rows]
-        has_gidx = gkeys is not None
-        all_d, all_c = [], []
-        for bi in range(rows.size):
-            key = int(gkeys[bi]) if has_gidx else bi
-            got = self._dec_plain.get(key) if has_gidx else None
-            if got is None:
-                g = rows[bi]
-                ids = decode_deltas(V["doc_gaps"][g])
-                raw = decode_tfs(V["tfs"][g]).astype(np.float64)
-                got = (ids, raw, raw)  # plain path: scoring tfs == raw tfs
-                if has_gidx:
-                    self._dec_plain[key] = got
-            ids, tfs, raw = got
-            nz = np.flatnonzero(raw > 0)  # anchor-only rows: no body match
-            if nz.size == 0:
-                continue
-            dids = ids[nz]
-            all_d.append(dids)
-            all_c.append(bm25.contrib(tfs[nz],
-                                      self.doc_len[dids - self._doc_base],
-                                      self.avgdl,
-                                      idfs[int(term_ids_arr[bi])]))
-        if not all_d:
-            return empty
-        d = np.concatenate(all_d)
-        uniq, inv = np.unique(d, return_inverse=True)
-        tot = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(tot, inv, np.concatenate(all_c))
-        return uniq, tot
+    def _decode(self, h: dict, g: int):
+        """-> (doc_ids, scoring tfs, raw body tfs) of block row ``g``,
+        decoded into the handle's decode cache."""
+        V = h["V"]
+        ids = decode_deltas(V["doc_gaps"][g])
+        raw = decode_tfs(V["tfs"][g]).astype(np.float64)
+        if h["field_boost"]:
+            tfs = bm25.weighted_tf(raw, *(
+                decode_tfs(V[c][g]).astype(np.float64)
+                for c in ("title_tfs", "anchor_tfs", "meta_tfs", "alt_tfs")))
+        elif h["title_boost"]:
+            ttfs = decode_tfs(V["title_tfs"][g]).astype(np.float64)
+            tfs = raw + (bm25.W_TITLE - 1.0) * ttfs
+        else:
+            tfs = raw
+        got = h["dec"][g] = (ids, tfs, raw)
+        return got
+
+    def _positions(self, h: dict, g: int, raw_tfs: np.ndarray):
+        """-> (positions, per-doc offsets) of block row ``g``; ``raw_tfs``
+        is its decoded body tf array (raw tf counts, NOT the title-weighted
+        tfs, frame positions)."""
+        got = h["pos"].get(g)
+        if got is None:
+            from ..kernel.codec import decode_positions
+            pos = decode_positions(h["V"]["positions"][g], raw_tfs)
+            offsets = np.concatenate(([0], np.cumsum(raw_tfs))).astype(
+                np.int64)
+            got = h["pos"][g] = (pos, offsets)
+        return got
+
+    def doc_positions(self, h: dict, doc_id: int, lo: int, hi: int) -> list:
+        """Per matched term, the ascending positions of ``doc_id``, a doc
+        of range [lo, hi)."""
+        rlo, idx = h["range"]
+        if rlo != lo:  # not the range score_range read last
+            idx = blocks_in_range(h["t_begin"], h["t_end"], h["blk_min"],
+                                  h["blk_max"], lo, hi)
+        out = []
+        for bi in idx:
+            g = int(h["rows"][bi])
+            ids, _tfs, raw = h["dec"].get(g) or self._decode(h, g)
+            j = int(np.searchsorted(ids, doc_id))
+            if j < len(ids) and ids[j] == doc_id:
+                pos, offs = self._positions(h, g, raw)
+                seg = pos[offs[j]:offs[j + 1]]
+                if len(seg):  # tf=0 (anchor-only) rows have no positions
+                    out.append(seg)
+        return out
 
     def rerank_expected_reward(self, ranked: list[tuple[int, float]],
                                iterations: int | None = None,
@@ -911,11 +846,3 @@ def bm25_topk_df(spark, index_dir: str, query: str, k: int = 10):
         .select("doc_id", (F.col("prior") * F.col("c")).alias("score")))
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
-
-def search_many(engine: QueryEngine, queries: list[str], k: int = 10,
-                **kwargs) -> dict[str, list[tuple[int, float]]]:
-    """Batch query execution over a warm engine: shared terms across the
-    batch decode once (the engine-level decode caches persist across
-    search() calls in preload mode). Results identical to per-query
-    search()."""
-    return {q: engine.search(q, k=k, **kwargs) for q in queries}

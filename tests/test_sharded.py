@@ -75,24 +75,18 @@ def test_sharded_empty_and_unknown(sharded):
 
 def test_shard_nonpreload_matches(index_dir, single):
     """shard + preload=False: per-query parquet reads with the shard's term
-    filter — same ranking."""
+    filter — same ranking, exhaustive and pruned. Non-preloaded handles
+    decode into per-query dicts: no entry lands in a shard's cross-query
+    decode cache, where no later query could ever hit it."""
     sh = ShardedQueryEngine(index_dir, n_shards=3, preload=False)
     for q in REFERENCE_QUERIES[:4]:
         want = single.search(q, k=10)
-        got = sh.search(q, k=10)
-        assert [d for d, _ in got] == [d for d, _ in want], q
-
-
-def test_parallel_scatter_identical(index_dir, single, sharded):
-    """parallel=True (thread-pool scatter) must be bit-identical to both
-    the sequential sharded path and the single engine, incl. dedup."""
-    par = ShardedQueryEngine(index_dir, n_shards=4, parallel=True)
-    for q in REFERENCE_QUERIES:
-        assert par.search(q, k=10) == sharded.search(q, k=10) == \
-            single.search(q, k=10), q
-        assert par.search(q, k=10, dedup=True) == \
-            sharded.search(q, k=10, dedup=True), q
-    assert par.search("") == []
+        for prune in (False, True):
+            got = sh.search(q, k=10, prune=prune)
+            assert [d for d, _ in got] == [d for d, _ in want], (q, prune)
+            np.testing.assert_allclose([s for _, s in got],
+                                       [s for _, s in want], rtol=1e-9)
+    assert [len(s._dec_plain) for s in sh.shards] == [0, 0, 0]
 
 
 # -- r5: doc-range-partitioned gather tier + gather-fed-theta pruning ------
@@ -142,26 +136,27 @@ def test_doc_shards_partition_corpus(single, doc_sharded):
 
 
 def test_pruned_scatter_rank_identical(single, doc_sharded, sharded):
-    """The gather-fed-theta scatter must match the single engine AND the
-    exhaustive scatter, incl. dedup (r4 verdict Next №4)."""
+    """Term-sharded search, pruned or not, over 1 and 3 doc shards, with
+    and without dedup, must match the single engine's exhaustive
+    (prune=False) ranking (r4 verdict Next №4)."""
     for q in REFERENCE_QUERIES + FUZZ:
-        want = single.search(q, k=10)
-        got = doc_sharded.search(q, k=10, prune=True)
-        assert [d for d, _ in got] == [d for d, _ in want], q
-        np.testing.assert_allclose([s for _, s in got],
-                                   [s for _, s in want], rtol=1e-9)
-        exh = sharded.search(q, k=10)
-        assert [d for d, _ in got] == [d for d, _ in exh], q
-        np.testing.assert_allclose([s for _, s in got],
-                                   [s for _, s in exh], rtol=1e-9)
-    for q in REFERENCE_QUERIES[:4]:
-        assert doc_sharded.search(q, k=10, dedup=True, prune=True) == \
-            single.search(q, k=10, dedup=True), q
+        for k in (1, 3, 10, 100):
+            for dedup in (False, True):
+                want = single.search(q, k=k, dedup=dedup, prune=False)
+                for eng in (sharded, doc_sharded):
+                    for prune in (True, False):
+                        got = eng.search(q, k=k, dedup=dedup, prune=prune)
+                        case = (q, k, dedup, eng.n_doc_shards, prune)
+                        assert [d for d, _ in got] == \
+                            [d for d, _ in want], case
+                        np.testing.assert_allclose(
+                            [s for _, s in got], [s for _, s in want],
+                            rtol=1e-9, err_msg=str(case))
 
 
 def test_pruned_scatter_skips_blocks(index_dir):
     """The point of the theta feed: per-shard decoded-block counts drop vs
-    the exhaustive scatter on a prunable query (mirrors the single engine's
+    exhaustive scoring on a prunable query (mirrors the single engine's
     test_prune_skips_blocks). Result caches off so instrumentation is
     never stale."""
     from hadoopsearchengine_spark.operators.wand import QueryEngine
@@ -177,17 +172,3 @@ def test_pruned_scatter_skips_blocks(index_dir):
     # sanity: the prune never scores MORE than the single-engine WAND
     eng.search(q, k=10, prune=True)
     assert pruned_total <= eng.blocks_scored
-
-
-def test_close_and_context_manager(index_dir):
-    """close() shuts the scatter pool down (r4 ADVICE: thread leak); the
-    context-manager form is equivalent; close is idempotent."""
-    with ShardedQueryEngine(index_dir, n_shards=2, parallel=True) as sq:
-        assert sq._pool is not None
-        assert sq.search(REFERENCE_QUERIES[0], k=5)
-    assert sq._pool is None
-    sq.close()  # idempotent
-    # sequential engines have no pool to leak
-    sq2 = ShardedQueryEngine(index_dir, n_shards=2)
-    assert sq2._pool is None
-    sq2.close()
