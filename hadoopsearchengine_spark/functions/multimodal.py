@@ -32,7 +32,7 @@ import hashlib
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..kernel import imagex
+from ..kernel import imagex, round_half_up
 
 FEATURES_SCHEMA = ("media_id long, n_bytes long, sha256 string, width int, "
                    "height int, mean_luma double")
@@ -206,18 +206,6 @@ AUDIO_SCHEMA = ("media_id long, n_bytes long, sha256 string, "
                 "duration_s double, rms double, peak double")
 
 
-def _round_half_up(v: float, nd: int) -> float:
-    """Round half AWAY FROM ZERO like DuckDB/SQL round() — Python's round()
-    is banker's (half-even), and WAV peak values are exact binary fractions
-    k/32768 that land on exact .5 decimal ties at 6dp whenever |k| is
-    256*odd (e.g. 256/32768 = 0.0078125 -> SQL 0.007813, banker's 0.007812).
-    The oracle compare hashes values, so the tie side must match (ADVICE
-    r4)."""
-    import math
-    scale = 10.0 ** nd
-    return math.copysign(math.floor(abs(v) * scale + 0.5), v) / scale
-
-
 def extract_audio_features(df: DataFrame, media_col: str, id_col: str,
                            fake: bool = True,
                            round_to: int = 6) -> DataFrame:
@@ -248,10 +236,10 @@ def extract_audio_features(df: DataFrame, media_col: str, id_col: str,
         return {**base, "sample_rate": int(rate),
                 "n_channels": int(x.shape[1]),
                 "n_frames": int(x.shape[0]),
-                "duration_s": _round_half_up(x.shape[0] / rate, round_to),
-                "rms": _round_half_up(float(np.sqrt(np.mean(x * x))),
-                                      round_to) if x.size else None,
-                "peak": _round_half_up(float(np.abs(x).max()), round_to)
+                "duration_s": round_half_up(x.shape[0] / rate, round_to),
+                "rms": round_half_up(float(np.sqrt(np.mean(x * x))),
+                                     round_to) if x.size else None,
+                "peak": round_half_up(float(np.abs(x).max()), round_to)
                 if x.size else None}
 
     def run(batches):

@@ -10,7 +10,7 @@ Scale notes:
 - links are hash-repartitioned on ``src`` ONCE up front and persisted, so the
   per-iteration ``ranks(src)`` join reuses a co-partitioned build side; the
   per-iteration shuffle is only the groupBy(dst) of the scatter output.
-- ``localCheckpoint`` every few cycles truncates the 20-join lineage (else the
+- ``localCheckpoint`` every cycle truncates the 20-join lineage (else the
   plan grows exponentially and the driver OOMs on plan analysis).
 - dangling mass is a scalar aggregate per cycle (tiny job vs the scatter).
 """
@@ -63,22 +63,16 @@ def build_link_graph(edges: DataFrame, max_links_per_src: int = 10,
 
 def pagerank(links: DataFrame, n_docs: int, doc_ids: DataFrame,
              iterations: int = ITERATIONS, damping: float = DAMPING,
-             num_partitions: int | None = None,
-             checkpoint_every: int = 1) -> DataFrame:
+             num_partitions: int | None = None) -> DataFrame:
     """links(src, dst, weight), doc_ids(doc_id) -> (doc_id, pagerank).
 
     Matches oracle.index.OracleIndex._pagerank to float64 roundoff.
 
-    ``checkpoint_every``: cycles between eager localCheckpoints. In-between
-    cycles only ``persist()`` (lazy — no job); each cached cycle still
-    computes exactly once (ranks_i is referenced twice — scatter AND
-    dangling aggregate — and the cache deduplicates it), and results are
-    float-exact for any K (measured: K=1 vs K=4 identical to the last bit
-    on a 500k-edge graph). K>1 does NOT cut the iteration ladder in
-    practice — the per-cycle dangling broadcast forces a materialization
-    job anyway, and cache writes cost what the checkpoint saved (measured
-    94 s K=1 vs 104 s K=4) — so the default stays 1; the knob exists for
-    clusters where block-manager writes are the bottleneck.
+    Every cycle ends in an eager ``localCheckpoint``. Checkpointing only
+    every K cycles (``persist()`` in between) measured slower — 94 s K=1 vs
+    104 s K=4 on a 500k-edge graph, float-exact either way — because the
+    per-cycle dangling broadcast forces a materialization job anyway and
+    cache writes cost what the checkpoint saved.
     """
     spark = links.sparkSession
     # size the per-cycle shuffle to the graph (edges, not nodes): ~50k edges
@@ -97,8 +91,6 @@ def pagerank(links: DataFrame, n_docs: int, doc_ids: DataFrame,
     # materialization rounds only add scheduler latency × 20 cycles
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     links_p = links.repartition(graph_part, "src").persist()
-    links_p.count()  # materialize once; reused every cycle
-
     # the dangling flag rides ON the rank rows (one static left-anti join
     # BEFORE the loop) so the per-cycle dangling-mass aggregate is a filter
     # + 1-row agg over the checkpointed ranks — no per-cycle join/sort
@@ -107,48 +99,43 @@ def pagerank(links: DataFrame, n_docs: int, doc_ids: DataFrame,
                .join(src_set.withColumn("_nd", F.lit(True)), "doc_id", "left")
                .select("doc_id", F.coalesce("_nd", F.lit(False)).alias("_nd"))
                .persist())
-
-    ranks = doc_ids.withColumn("rank", F.lit(1.0 / n_docs))
-    d = damping
-    cached: list[DataFrame] = []
-    for _i in range(iterations):
-        # dangling mass folded into the same job as the scatter/gather (a
-        # 1-row aggregate cross-joined in) — ONE action per cycle instead of
-        # a separate collect, halving per-cycle scheduler latency
-        dangling_df = (
-            ranks.filter(~F.col("_nd"))
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")))
-        contrib = (
-            links_p.join(ranks.select(F.col("doc_id").alias("src"), "rank"),
-                         "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("weight")).alias("contrib"))
-            .withColumnRenamed("dst", "doc_id"))
-        ranks = (
-            doc_ids.join(contrib, "doc_id", "left")
-            .crossJoin(F.broadcast(dangling_df))
-            .select(
-                "doc_id", "_nd",
-                (F.lit((1.0 - d) / n_docs)
-                 + F.lit(d) * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                               + F.col("_dang") / F.lit(float(n_docs))))
-                .alias("rank")))
-        # checkpoint every K cycles: truncates the growing join lineage
-        # (the reference also materializes score files per cycle,
-        # AccumulateHashDivision.cpp); persist() in between keeps each
-        # cycle single-computed without paying a job per cycle
-        if (_i + 1) % checkpoint_every == 0 or _i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-            for c in cached:
-                c.unpersist()
-            cached = []
-        else:
-            ranks = ranks.persist()
-            cached.append(ranks)
-    links_p.unpersist()
-    doc_ids.unpersist()
-    # the final ranks are materialized (checkpointed), so restoring the
-    # session confs here cannot affect them
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    try:
+        links_p.count()  # materialize once; reused every cycle
+        ranks = doc_ids.withColumn("rank", F.lit(1.0 / n_docs))
+        d = damping
+        for _i in range(iterations):
+            # dangling mass folded into the same job as the scatter/gather
+            # (a 1-row aggregate cross-joined in) — ONE action per cycle
+            # instead of a separate collect, halving per-cycle scheduler
+            # latency
+            dangling_df = (
+                ranks.filter(~F.col("_nd"))
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")))
+            contrib = (
+                links_p.join(ranks.select(F.col("doc_id").alias("src"),
+                                          "rank"), "src")
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") * F.col("weight")).alias("contrib"))
+                .withColumnRenamed("dst", "doc_id"))
+            # the checkpoint truncates the growing join lineage (the
+            # reference also materializes score files per cycle,
+            # AccumulateHashDivision.cpp)
+            ranks = (
+                doc_ids.join(contrib, "doc_id", "left")
+                .crossJoin(F.broadcast(dangling_df))
+                .select(
+                    "doc_id", "_nd",
+                    (F.lit((1.0 - d) / n_docs)
+                     + F.lit(d) * (F.coalesce(F.col("contrib"), F.lit(0.0))
+                                   + F.col("_dang") / F.lit(float(n_docs))))
+                    .alias("rank"))
+                .localCheckpoint(eager=True))
+    finally:
+        # the final ranks are materialized (checkpointed), so releasing the
+        # caches and restoring the session confs cannot affect them; a
+        # failed cycle hands the session back unchanged too
+        links_p.unpersist()
+        doc_ids.unpersist()
+        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return ranks.select("doc_id", F.col("rank").alias("pagerank"))

@@ -109,12 +109,15 @@ class ShardedQueryEngine:
     """Scatter-gather search over ``n_shards`` term-shard engines and
     ``n_doc_shards`` doc-range gather partitions.
 
-    Engine kwargs (preload / result_cache / decode_cache) pass through to
-    every term shard. The shards run in this process, one after another;
-    a deployment runs them as separate servers."""
+    ``preload`` and ``decode_cache`` pass through to every term shard.
+    ``search`` scores through the shards' scatter handles, never a shard's
+    own ``search``, so the shards are built without a result cache. The
+    shards run in this process, one after another; a deployment runs them
+    as separate servers."""
 
     def __init__(self, index_dir: str, n_shards: int = 4,
-                 n_doc_shards: int = 1, **engine_kwargs):
+                 n_doc_shards: int = 1, preload: bool = True,
+                 decode_cache: int = 16384):
         if n_shards < 1:
             raise ValueError("n_shards must be >= 1")
         if n_doc_shards < 1:
@@ -122,7 +125,8 @@ class ShardedQueryEngine:
         self.index_dir = index_dir
         self.n_shards = n_shards
         self.shards = [
-            QueryEngine(index_dir, shard=(i, n_shards), **engine_kwargs)
+            QueryEngine(index_dir, preload=preload, result_cache=0,
+                        decode_cache=decode_cache, shard=(i, n_shards))
             for i in range(n_shards)]
         # doc tier: evenly carved [0, max_doc] boundary partition — sized
         # from parquet metadata, never a corpus scan

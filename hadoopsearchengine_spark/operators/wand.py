@@ -689,13 +689,13 @@ class QueryEngine:
         ExpRew.h; the serving form of operators.exprew — r4 verdict Next
         №9): the candidate-candidate subgraph of the index's ``links``
         table is fetched by src-predicate pushdown (candidate-sized, never
-        a corpus scan) and the identical recurrence runs in numpy
-        (operators.exprew.expected_reward_numpy, pinned equal to the
-        relational form by pytest). Returns the surviving candidates as
-        [(doc_id, trav_prob)] in final rank order; candidates with no
-        candidate-candidate link are unaffected by the walk and append
-        after the ranked survivors in their original order (the reference
-        re-ranks only its active doc buffer, ExpRew.h:198-216)."""
+        a corpus scan) and operators.exprew.expected_reward_numpy runs the
+        recurrence on it — the same function the Spark operator's grouped
+        map calls, so the two agree by construction. Returns the surviving
+        candidates as [(doc_id, trav_prob)] in final rank order; candidates
+        with no candidate-candidate link are unaffected by the walk and
+        append after the ranked survivors in their original order (the
+        reference re-ranks only its active doc buffer, ExpRew.h:198-216)."""
         from .exprew import (ITERATIONS, RECURRENT_THRESHOLD,
                              expected_reward_numpy)
         import pyarrow.parquet as pq

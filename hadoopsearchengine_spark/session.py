@@ -48,6 +48,66 @@ def _pools_file() -> str:
     return path
 
 
+def _base_conf(shuffle_partitions: int, driver_mem: str) -> dict[str, str]:
+    """The conf every session of this engine shares."""
+    return {
+        "spark.executorEnv.PYTHONPATH": os.environ.get("PYTHONPATH", ""),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        # FAIR job scheduling: the build runs independent stages from
+        # concurrent threads (plans/build_index._finish_index); under the
+        # default FIFO a heavy scan stage occupies every slot and the
+        # latency-bound links -> 20-cycle-PageRank chain queues BEHIND it,
+        # then runs with most slots idle — serialized onto the critical
+        # path. FAIR gives each stage-thread's pool an equal share, so the
+        # low-CPU chain finishes under the heavy scans. Single-threaded
+        # callers are unaffected (one pool). The "latency" pool (see
+        # _POOLS_XML) is high-weight so scheduling-latency-bound stages get
+        # freed slots first.
+        "spark.scheduler.mode": "FAIR",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", driver_mem),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # Local-mode split sizing: bench/test inputs are sub-GB, so Spark's
+        # default 128 MB splits leave scan-rooted stages with 2-3 tasks —
+        # stragglers and idle slots dominate. 16 MB keeps >=8 tasks per
+        # stage at bench scale; measured 2.2x on the full 48k-page build
+        # (local[2] 505s -> 231s, local[8] 261s -> 162s, BENCH/BASELINE.md).
+        # A real cluster reading TB-scale inputs wants the 128 MB default
+        # back — override via extra_conf / spark-submit --conf (the env
+        # knob exists for exactly that).
+        "spark.sql.files.maxPartitionBytes": os.environ.get(
+            "SPARK_GRAFT_SPLIT_BYTES", str(16 * 1024 * 1024)),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes":
+            str(8 * 1024 * 1024),
+    }
+
+
+def _build(master: str, app_name: str, conf: dict[str, str],
+           extra_conf: dict[str, str] | None) -> SparkSession:
+    """getOrCreate with ``conf`` then ``extra_conf`` and the FAIR pools
+    file. Spark reads the allocation file only while it creates the
+    SparkContext, so the file is deleted once getOrCreate returns."""
+    builder = SparkSession.builder.master(master).appName(app_name)
+    pools = _pools_file()
+    if pools:
+        conf = {**conf, "spark.scheduler.allocation.file": pools}
+    try:
+        for k, v in {**conf, **(extra_conf or {})}.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
+    finally:
+        if pools:
+            os.unlink(pools)
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
 def get_spark(
     app_name: str = "spark-fulltext-engine",
     cores: int | None = None,
@@ -62,54 +122,8 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .config("spark.executorEnv.PYTHONPATH",
-                os.environ.get("PYTHONPATH", ""))
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # FAIR job scheduling: the build runs independent stages from
-        # concurrent threads (plans/build_index._finish_index); under the
-        # default FIFO a heavy scan stage occupies every slot and the
-        # latency-bound links -> 20-cycle-PageRank chain queues BEHIND it,
-        # then runs with most slots idle — serialized onto the critical
-        # path. FAIR gives each stage-thread's pool an equal share, so the
-        # low-CPU chain finishes under the heavy scans. Single-threaded
-        # callers are unaffected (one pool). The "latency" pool (see
-        # _POOLS_XML) is high-weight so scheduling-latency-bound stages get
-        # freed slots first.
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Local-mode split sizing: bench/test inputs are sub-GB, so Spark's
-        # default 128 MB splits leave scan-rooted stages with 2-3 tasks —
-        # stragglers and idle slots dominate. 16 MB keeps >=8 tasks per
-        # stage at bench scale; measured 2.2x on the full 48k-page build
-        # (local[2] 505s -> 231s, local[8] 261s -> 162s, BENCH/BASELINE.md).
-        # A real cluster reading TB-scale inputs wants the 128 MB default
-        # back — override via extra_conf / spark-submit --conf (the env knob
-        # exists for exactly that).
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_SPLIT_BYTES",
-                               str(16 * 1024 * 1024)))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                str(8 * 1024 * 1024))
-    )
-    pools = _pools_file()
-    if pools:
-        builder = builder.config("spark.scheduler.allocation.file", pools)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return _build(f"local[{cores}]", app_name,
+                  _base_conf(shuffle_partitions, "24g"), extra_conf)
 
 
 def get_spark_cluster(
@@ -143,37 +157,7 @@ def get_spark_cluster(
     total_cores = n_executors * cores_per_executor
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * total_cores, 8)
-    builder = (
-        SparkSession.builder
-        .master(f"local-cluster[{n_executors},{cores_per_executor},"
-                f"{executor_mem_mb}]")
-        .appName(app_name)
-        .config("spark.executor.memory", f"{executor_mem_mb - 1024}m")
-        .config("spark.executorEnv.PYTHONPATH",
-                os.environ.get("PYTHONPATH", ""))
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.scheduler.mode", "FAIR")  # same rationale as get_spark
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # same local-input split sizing rationale as get_spark
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_SPLIT_BYTES",
-                               str(16 * 1024 * 1024)))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                str(8 * 1024 * 1024))
-    )
-    pools = _pools_file()
-    if pools:
-        builder = builder.config("spark.scheduler.allocation.file", pools)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    conf = {**_base_conf(shuffle_partitions, "8g"),
+            "spark.executor.memory": f"{executor_mem_mb - 1024}m"}
+    return _build(f"local-cluster[{n_executors},{cores_per_executor},"
+                  f"{executor_mem_mb}]", app_name, conf, extra_conf)

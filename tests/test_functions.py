@@ -451,16 +451,16 @@ def test_round_half_up_matches_sql_round():
     compare against it directly."""
     import duckdb
 
-    from hadoopsearchengine_spark.functions.multimodal import _round_half_up
+    from hadoopsearchengine_spark.kernel import round_half_up
 
     con = duckdb.connect()
     for k in (256, 768, 1280, 3 * 256, 12345, 1, 32767):
         v = k / 32768.0
         want = con.execute(f"select round({v!r}::DOUBLE, 6)").fetchone()[0]
-        assert _round_half_up(v, 6) == want, (k, v)
+        assert round_half_up(v, 6) == want, (k, v)
     # the motivating tie: python round() gives 0.007812, SQL gives 0.007813
     assert round(256 / 32768.0, 6) == 0.007812
-    assert _round_half_up(256 / 32768.0, 6) == 0.007813
+    assert round_half_up(256 / 32768.0, 6) == 0.007813
 
 
 def test_semdedup_giant_cell_split(spark):

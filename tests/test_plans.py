@@ -165,9 +165,8 @@ def test_r4_ops_plan_shapes(spark):
         assert marker not in plan, (marker, plan[:2000])
     assert "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan
 
-    # the iterated walk localCheckpoints per cycle, so audit the candidate
-    # restriction (the scale-relevant joins) on the edge stage directly,
-    # and the final rank attach on the returned frame
+    # the walk is one grouped map over the candidate-restricted edges, so
+    # the returned frame's plan holds the scale-relevant joins directly
     from hadoopsearchengine_spark.operators.exprew import expected_reward
     import __spark_entry__ as E
     cand = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
@@ -175,7 +174,8 @@ def test_r4_ops_plan_shapes(spark):
                                   "src long, dst long, weight double")
     out = expected_reward(cand, links, iterations=1)
     plan = _plan(out)
-    assert "BroadcastHashJoin" in plan          # rank attach is broadcast
+    assert "BroadcastHashJoin" in plan     # candidate restriction broadcast
+    assert "FlatMapGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
     plan = _plan(E.queries()["graph_expected_reward"](spark, SF))
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan

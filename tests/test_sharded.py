@@ -157,11 +157,11 @@ def test_pruned_scatter_rank_identical(single, doc_sharded, sharded):
 def test_pruned_scatter_skips_blocks(index_dir):
     """The point of the theta feed: per-shard decoded-block counts drop vs
     exhaustive scoring on a prunable query (mirrors the single engine's
-    test_prune_skips_blocks). Result caches off so instrumentation is
-    never stale."""
+    test_prune_skips_blocks). Caches off so instrumentation is never
+    stale."""
     from hadoopsearchengine_spark.operators.wand import QueryEngine
     sq = ShardedQueryEngine(index_dir, n_shards=4, n_doc_shards=2,
-                            result_cache=0, decode_cache=0)
+                            decode_cache=0)
     eng = QueryEngine(index_dir, result_cache=0)
     q = "cold war"
     eng.search(q, k=10, prune=False)
